@@ -274,7 +274,7 @@ def main() -> int:
     # (32c here) canonical. The twin lookup only ever compares
     # same-cpus, same-sf medians — an 8-core median is not a valid 2×
     # outlier reference for a 32-core run or vice versa.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     base_dir = os.path.dirname(os.path.abspath(__file__))
     detail_path = os.path.join(base_dir, "BENCH_DETAIL.json")
     config_path = os.path.join(base_dir, f"BENCH_DETAIL_c{cpus}.json")

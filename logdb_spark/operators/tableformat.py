@@ -1505,7 +1505,6 @@ def table_column_mapping_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     names) is the exact non-starter column mapping exists to avoid.
     Reads stay splittable parquet scans; the projection aliases are
     plan-time only."""
-    import json
     import os
 
     orders = load_table(spark, sf_dir, "orders").withColumn(
@@ -1557,13 +1556,10 @@ def table_column_mapping_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # Certificates (all O(1)/O(files) metadata or single-row aggs):
-    with open(tx._vpath(1)) as f:
-        doc1 = json.load(f)
+    doc1, doc2 = tx.log_actions(2)
     feature_declared = "column_mapping" in doc1["meta"].get(
         "protocol", {}
     ).get("features", [])
-    with open(tx._vpath(2)) as f:
-        doc2 = json.load(f)
     rename_metadata_only = not doc2["add"] and not doc2["remove"]
     # The change feed serves DISPLAY names under the current map
     # (VERDICT r12 task #6): schema-only probe — _feed_fields projects

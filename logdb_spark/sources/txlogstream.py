@@ -41,15 +41,22 @@ selects display names. Without this, a change-feed consumer of a
 column-mapped table would silently read ``f<id>`` names — the exact
 mis-read the protocol guard exists to refuse.
 
-PROTOCOL GATE (VERDICT r12 wrong #2): both readers check the table's
-protocol action at construction (the same
-min-reader-version + table-features gate ``TxTable.check_protocol``
-runs on snapshot reads) — a table demanding a feature this source
-does not implement refuses LOUDLY up front instead of streaming
-wrong bytes. The gate subsumes what used to be a special case for
-equality deletes: eq_delete is now a DECLARED stream feature (cdf
-mode emits key retractions; append mode still refuses at plan time,
-because an append feed has no way to express a retraction).
+LOG ACCESS: this module never opens a log file itself. Every log
+read — head version, commit documents, protocol, read horizon,
+``schema_map`` — goes through a Spark-free ``TxTable`` handle
+(``tablefmt.open_table``), so the feed and snapshot reads resolve the
+log with one checkpoint-seeded replay. ``open_table`` refuses a path
+that holds no log instead of creating an empty table there.
+
+PROTOCOL GATE (VERDICT r12 wrong #2): both readers run
+``TxTable.check_protocol`` at construction — the snapshot reader's
+min-reader-version + table-features gate, with its capabilities and
+its exception — so a table demanding a feature this source does not
+implement refuses LOUDLY up front instead of streaming wrong bytes.
+The gate subsumes what used to be a special case for equality
+deletes: eq_delete is a DECLARED feature (cdf mode emits key
+retractions; append mode still refuses at plan time, because an
+append feed has no way to express a retraction).
 
 READ HORIZON: a stream whose range begins below the table's vacuum
 read horizon (``meta.min_read_version``) references physically
@@ -119,7 +126,6 @@ wants.
 
 from __future__ import annotations
 
-import json
 import os
 import re
 
@@ -130,111 +136,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-_VFILE = re.compile(r"^v(\d{6})\.json$")
-
-# Stream-reader capabilities, the txlogstream twin of
-# tablefmt.READER_VERSION / READER_FEATURES (kept separate on purpose:
-# the batch snapshot reader and the change feed can honestly support
-# different feature sets, and each must declare only its own).
-_STREAM_READER_VERSION = 2
-_STREAM_FEATURES = frozenset(
-    {"column_mapping", "read_horizon", "equality_deletes"}
-)
-
-
-def _log_versions(root: str) -> list[int]:
-    log_dir = os.path.join(root, "_txlog")
-    return sorted(
-        int(m.group(1))
-        for f in os.listdir(log_dir)
-        if (m := _VFILE.match(f))
-    )
-
-
-def _commit_doc(root: str, version: int) -> dict:
-    with open(os.path.join(root, "_txlog", f"v{version:06d}.json")) as f:
-        return json.load(f)
-
-
-def _cp_state(root: str) -> tuple[int, dict]:
-    """(version, hot doc) of the newest checkpoint via the
-    ``_last_checkpoint`` pointer — O(1), no directory listing; (0, {})
-    when none exists or a doc is torn (degrade to the full walk,
-    never a wrong answer). The hot doc carries the newest protocol,
-    min_read_version, and schema_map at its version (tablefmt.
-    write_checkpoint), which is exactly the metadata this reader
-    resolves at construction — without the checkpoint, each
-    resolution on a deep table is an O(log) walk of commit docs."""
-    log_dir = os.path.join(root, "_txlog")
-    try:
-        with open(os.path.join(log_dir, "_last_checkpoint")) as f:
-            v = json.load(f)["version"]
-        with open(os.path.join(log_dir, f"checkpoint.v{v:06d}.json")) as f:
-            return v, json.load(f)
-    except (OSError, ValueError, KeyError):
-        return 0, {}
-
-
-def _newest_meta(root: str, key: str):
-    """Newest ``meta[key]`` across the log, or None — the txlogstream
-    twin of TxTable.newest_meta (this module reads the log with
-    os/json only, no SparkSession in hand). Checkpoint-bounded
-    backward probe: scan the post-checkpoint tail newest-first, then
-    take the checkpointed value. A pre-r13 checkpoint that never
-    recorded ``key`` (absent, not null) falls back to the full walk —
-    a map committed below such a checkpoint must not turn invisible."""
-    cp_v, cp = _cp_state(root)
-    stop = cp_v if key in cp else 0
-    for v in reversed(_log_versions(root)):
-        if v <= stop:
-            break
-        meta = _commit_doc(root, v).get("meta", {})
-        if key in meta:
-            return meta[key]
-    return cp.get(key)
-
-
-def _read_horizon(root: str) -> int:
-    """Newest ``meta.min_read_version`` (0 = nothing ever vacuumed) —
-    monotone by construction, so newest wins; checkpoint value + tail
-    scan, same degradation rule as ``_newest_meta``."""
-    cp_v, cp = _cp_state(root)
-    start = cp_v if "min_read_version" in cp else 0
-    h = cp.get("min_read_version") or 0
-    for v in _log_versions(root):
-        if v > start:
-            h = max(
-                h,
-                _commit_doc(root, v).get("meta", {}).get(
-                    "min_read_version", 0
-                ),
-            )
-    return h
-
-
-def _check_stream_protocol(root: str) -> None:
-    """The protocol gate, at the STREAM door (VERDICT r12 wrong #2 —
-    check_protocol guarded snapshot reads while any change-feed
-    consumer walked straight past it): refuse a table whose newest
-    protocol action demands a reader version or feature this source
-    does not implement. Same newest-wins resolution as
-    TxTable.protocol(); raises the same exception type so callers
-    catch one class for both doors."""
-    proto = _newest_meta(root, "protocol")
-    if not proto:
-        return
-    from logdb_spark.tablefmt import UnsupportedTableFeature
-
-    unknown = set(proto.get("features", [])) - _STREAM_FEATURES
-    if proto.get("min_reader", 0) > _STREAM_READER_VERSION or unknown:
-        raise UnsupportedTableFeature(
-            f"txlogstream: table at {root!r} requires reader version "
-            f">= {proto.get('min_reader', 0)} with features "
-            f"{sorted(proto.get('features', []))}; this stream source "
-            f"is version {_STREAM_READER_VERSION} with "
-            f"{sorted(_STREAM_FEATURES)} — refusing to stream rather "
-            f"than silently mis-reading (unknown: {sorted(unknown)})"
-        )
+from logdb_spark.tablefmt import open_table
 
 
 # ---- schema derivation -------------------------------------------------
@@ -317,13 +219,11 @@ def _feed_fields(root: str, columns: str | None = None) -> list[tuple]:
     are absent from footers by construction."""
     import pyarrow.dataset as pads
 
+    tx = open_table(root)
     footer = None
-    for v in reversed(_log_versions(root)):
-        adds = [
-            a
-            for a in _commit_doc(root, v)["add"]
-            if a.get("kind", "data") == "data"
-        ]
+    for v in range(tx.latest_version(), 0, -1):
+        (doc,) = tx.log_actions(v, from_version=v)
+        adds = [a for a in doc["add"] if a.get("kind", "data") == "data"]
         if adds:
             path = os.path.join(root, adds[-1]["path"])
             footer = pads.dataset(path, format="parquet").schema
@@ -334,7 +234,7 @@ def _feed_fields(root: str, columns: str | None = None) -> list[tuple]:
             "derive a feed schema from"
         )
     by_phys = {f.name: f.type for f in footer}
-    smap = _newest_meta(root, "schema_map")
+    smap = tx.newest_meta("schema_map")
     if smap is None:
         fields = [(f.name, f.name, f.type) for f in footer]
     else:
@@ -403,8 +303,7 @@ def _plan(
     directory listing per batch (a 100k-commit log would otherwise pay
     an O(log-size) list on every trigger; tools/streambench.py pins
     the flat per-batch plan time)."""
-    versions = range(lo + 1, hi + 1)
-    if versions:
+    if hi > lo:
         # Planned versions are (lo, hi]. Any vacuumed path was removed
         # at rv <= horizon and added strictly before that, so append
         # adds are safe from lo + 1 >= horizon; cdf additionally reads
@@ -421,8 +320,8 @@ def _plan(
                 "documented retention trade)"
             )
     out = []
-    for v in versions:
-        doc = _commit_doc(root, v)
+    for doc in open_table(root).log_actions(hi, from_version=lo + 1):
+        v = doc["version"]
         if doc.get("meta", {}).get("data_change", True) is False:
             continue
         if cdf:
@@ -539,16 +438,17 @@ def _resolve_fields(options, schema) -> list[tuple]:
 class _TxlogBatchReader(DataSourceReader):
     def __init__(self, options, schema=None):
         self.root = options["path"]
-        _check_stream_protocol(self.root)
+        tx = open_table(self.root)
+        tx.check_protocol()
         self.cdf = options.get("mode", "append") == "cdf"
         self.fields = _resolve_fields(options, schema)
-        self.horizon = _read_horizon(self.root)
+        self.horizon = tx.read_horizon()
         self.lo = int(options.get("from_version", 0))
         to = options.get("to_version")
         # Clamp to the head: _plan addresses the contiguous range
         # directly (no per-batch listing), so an out-of-range
         # to_version must not name nonexistent commits.
-        head = max(_log_versions(self.root), default=0)
+        head = tx.latest_version()
         self.hi = min(int(to), head) if to is not None else head
 
     def partitions(self):
@@ -590,11 +490,12 @@ class _TxlogStreamReader(DataSourceStreamReader):
     latestOffset, so even its first new batch is throttled."""
 
     def __init__(self, options, schema=None):
-        self.root = options["path"]
-        _check_stream_protocol(self.root)
+        self.tx = open_table(options["path"])
+        self.root = self.tx.root
+        self.tx.check_protocol()
         self.cdf = options.get("mode", "append") == "cdf"
         self.fields = _resolve_fields(options, schema)
-        self.horizon = _read_horizon(self.root)
+        self.horizon = self.tx.read_horizon()
         self.start_version = int(options.get("from_version", 0))
         # Option keys arrive LOWERCASED from the engine's
         # case-insensitive option map — look up accordingly.
@@ -608,7 +509,7 @@ class _TxlogStreamReader(DataSourceStreamReader):
         return {"version": self.start_version}
 
     def latestOffset(self):
-        head = max(_log_versions(self.root), default=0)
+        head = self.tx.latest_version()
         if self.max_commits is None:
             return {"version": head}
         if self._floor is None:

@@ -1143,17 +1143,13 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             vst = {"overflow": False, "tokens": []}
         if not vst["overflow"]:
-            # limit().collect() instead of take(): take() probes
-            # partitions with escalating jobs (2 jobs per batch
-            # profiled on this 31-token corpus — the first partition
-            # never yields 66 distinct rows); a limited collect is ONE
-            # bounded job with the identical ≤66-row transfer (r14).
+            # In PySpark 4.1.2 take(n) is a limit(n) followed by one
+            # collect, so at most 66 rows come back.
             new_toks = [
                 r["t"]
                 for r in new_docs.select(F.explode("toks").alias("t"))
                 .distinct()
-                .limit(66)
-                .collect()
+                .take(66)
             ]
             union = set(vst["tokens"]) | set(new_toks)
             if len(new_toks) >= 65 or len(union) > 64:

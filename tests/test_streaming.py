@@ -1741,6 +1741,55 @@ def test_txlog_stream_declared_on_empty_table_with_schema(spark, tmp_path):
     spark.catalog.dropTempView("txempty")
 
 
+def test_txlog_source_never_creates_a_table(spark, tmp_path):
+    """A stream or batch txlogstream read of a path that holds no
+    table raises — even with a user-supplied .schema(...), which
+    otherwise lets a stream be declared on an EMPTY table — and
+    leaves no directory behind: a reader must not create a table."""
+    import pytest as _pytest
+    from pyspark.sql import types as T
+
+    from logdb_spark.sources.txlogstream import (
+        _TxlogBatchReader,
+        _TxlogStreamReader,
+        register_txlogstream,
+    )
+
+    missing = tmp_path / "no_such_table"
+    opts = {"path": str(missing)}
+    for reader in (_TxlogBatchReader, _TxlogStreamReader):
+        with _pytest.raises(FileNotFoundError):
+            reader(opts)
+        with _pytest.raises(FileNotFoundError):
+            reader(opts, schema=T.StructType(
+                [T.StructField("event_id", T.LongType())]
+            ))
+    assert not missing.exists()
+
+    register_txlogstream(spark)
+    schema = "version bigint, event_id bigint"
+    with _pytest.raises(Exception, match="no transaction log"):
+        spark.read.format("txlogstream").schema(schema).option(
+            "path", str(missing)
+        ).load().collect()
+    with _pytest.raises(Exception, match="no transaction log"):
+        q = (
+            spark.readStream.format("txlogstream")
+            .schema(schema)
+            .option("path", str(missing))
+            .load()
+            .writeStream.format("memory")
+            .queryName("txmissing")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    assert not missing.exists()
+
+
 def test_txlog_throttle_state_machine_unit(spark, tmp_path):
     """Reader-level pin of the ADVICE r12 #1 invariant, covering the
     recovery path the end-to-end tests cannot force deterministically
@@ -1786,16 +1835,20 @@ def test_txlog_throttle_state_machine_unit(spark, tmp_path):
 
 
 def test_txlog_stream_meta_resolution_checkpoint_bounded(spark, tmp_path):
-    """r13: the stream reader resolves protocol / schema_map / read
+    """r13: the stream readers resolve protocol / schema_map / read
     horizon from the checkpoint hot doc + tail (O(tail), not a log
-    walk) — values must equal the full-walk answers, and a PRE-r13
-    checkpoint that never recorded schema_map must degrade to the
-    full walk rather than make a committed map invisible."""
+    walk) — values must equal the full-walk answers. A PRE-r13
+    checkpoint that never recorded schema_map, protocol or
+    min_read_version must count as no checkpoint — for TxTable and
+    both stream readers alike — rather than make a committed value
+    invisible (an absent protocol would let check_protocol admit a
+    table the stream gate refuses)."""
     import json as _json
 
     from logdb_spark.sources.txlogstream import (
-        _newest_meta,
-        _read_horizon,
+        _feed_fields,
+        _TxlogBatchReader,
+        _TxlogStreamReader,
     )
     from logdb_spark.tablefmt import TxTable, write_grouped
 
@@ -1822,20 +1875,36 @@ def test_txlog_stream_meta_resolution_checkpoint_bounded(spark, tmp_path):
     # Tail commit AFTER the checkpoint: newest-wins must still see it.
     smap2 = [smap[0]]
     tx.commit([], meta={"schema_map": smap2})
+    proto = {"min_reader": 2, "features": ["column_mapping", "read_horizon"]}
 
-    assert _newest_meta(tx.root, "schema_map") == smap2
-    assert _newest_meta(tx.root, "protocol") == {
-        "min_reader": 2,
-        "features": ["column_mapping", "read_horizon"],
-    }
-    assert _read_horizon(tx.root) == tx.read_horizon() > 0
+    # The full-walk answers, read straight off the commit documents.
+    newest, horizon = {}, 0
+    for c in tx.log_actions():
+        newest.update(c["meta"])
+        horizon = max(horizon, c["meta"].get("min_read_version", 0))
+    assert horizon > 0
+    assert newest["schema_map"] == smap2
+    assert newest["protocol"] == proto
 
-    # Degradation: strip schema_map from the hot doc (a pre-r13
-    # checkpoint) — the probe must fall back to the full walk and
-    # still find the newest map below AND above the checkpoint.
+    def assert_resolved():
+        assert tx.newest_meta("schema_map") == smap2
+        assert tx.protocol() == proto
+        assert tx.read_horizon() == horizon
+        assert [out for _, out, _ in _feed_fields(tx.root)] == ["event_id"]
+        for reader in (_TxlogBatchReader, _TxlogStreamReader):
+            r = reader({"path": tx.root})
+            assert r.horizon == horizon
+            assert [out for _, out, _ in r.fields] == ["event_id"]
+
+    assert_resolved()
+
+    # Degradation: strip each checkpoint-carried key from the hot doc
+    # (a pre-r13 checkpoint): every resolver must fall back to the full
+    # walk and still find the newest values below AND above it.
     with open(tx._cppath(cp_v)) as f:
         doc = _json.load(f)
-    doc.pop("schema_map")
-    with open(tx._cppath(cp_v), "w") as f:
-        _json.dump(doc, f)
-    assert _newest_meta(tx.root, "schema_map") == smap2
+    for key in ("schema_map", "protocol", "min_read_version"):
+        stripped = {k: v for k, v in doc.items() if k != key}
+        with open(tx._cppath(cp_v), "w") as f:
+            _json.dump(stripped, f)
+        assert_resolved()

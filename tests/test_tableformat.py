@@ -235,14 +235,15 @@ def test_checkpoint_read_equals_full_replay_everywhere(tmp_path):
     with interleaved removes, checkpoint-accelerated replay returns
     the identical live list (entries AND first-added order) as the
     full replay — plus the same txn-id set, ever-added paths, and
-    tombstone map at head."""
+    tombstone map at head (checkpoint-seeded vs v1-seeded replay)."""
     tx = _mini_log(tmp_path)
     assert tx.checkpoint_versions() == [10, 20]
     for v in range(1, tx.latest_version() + 1):
         assert tx.live_files(v) == tx.live_files(v, use_checkpoint=False)
     assert tx.committed_txn_ids() == {f"t{i}" for i in range(1, 27)}
     assert tx.all_added_paths() == {f"d/{i}" for i in range(1, 27)}
-    assert tx.tombstones() == tx._tombstones_full()
+    full = tx._replay(use_checkpoint=False, history=True)
+    assert tx.tombstones() == full.tombstones
 
 
 def test_checkpoint_bounds_tail_replay(tmp_path, monkeypatch):
@@ -262,6 +263,11 @@ def test_checkpoint_bounds_tail_replay(tmp_path, monkeypatch):
 
     monkeypatch.setattr(tablefmt.TxTable, "log_actions", counting)
     tx.live_files()  # head=26, newest checkpoint=20 → tail = 21..26
+    assert opened == [21, 22, 23, 24, 25, 26]
+    # A checkpoint-carried meta key is tail-bounded even when no commit
+    # ever set it (no walk back to v1).
+    opened.clear()
+    assert tx.newest_meta("schema_map") is None
     assert opened == [21, 22, 23, 24, 25, 26]
 
 
