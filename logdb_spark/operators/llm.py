@@ -38,14 +38,6 @@ def _TOKENS():
     return F.array_distinct(F.split("text", " "))
 
 
-def _doc_tokens(spark, sf_dir):
-    """(doc_id, token) pairs — distinct tokens per document."""
-    return (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(_TOKENS()).alias("token"))
-    )
-
-
 @register(
     "dedup_exact",
     oracle="""
@@ -84,103 +76,52 @@ _JACCARD_ORACLE = """
 """
 
 
-def _token_sets(spark, sf_dir) -> DataFrame:
-    """(doc_id, toks, n): sorted distinct-token array per document."""
-    return load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.array_sort(_TOKENS()).alias("toks"),
-        F.size(_TOKENS()).alias("n"),
+def _BIGRAMS():
+    """Distinct word-bigram shingles of ``text`` (order-preserving).
+
+    zip_with(toks, toks[2:]) — NOT transform+element_at over an index
+    sequence, which re-evaluates the split closure per element (O(w²)
+    splits per row; measured 7× slower). zip_with pads the shorter
+    side with null, so the final bigram is (last_word, null) → null
+    concat → filtered."""
+    toks = F.split("text", " ")
+    grams = F.zip_with(
+        toks,
+        F.slice(toks, 2, F.size(toks) - 1),
+        lambda a, b: F.concat(a, F.lit(" "), b),
     )
+    return F.array_distinct(F.filter(grams, lambda g: g.isNotNull()))
 
 
-def _pair_sides(docs: DataFrame, *, with_folds: bool) -> tuple[DataFrame, DataFrame]:
-    """(doc_a, toks_a, na[, fold0_a, fold1_a]) / ..._b projections of the
-    per-doc set relation for the self-pair join."""
-    sides = []
-    for s in ("a", "b"):
-        cols = [
-            F.col("doc_id").alias(f"doc_{s}"),
-            F.col("toks").alias(f"toks_{s}"),
-            F.col("n").alias(f"n{s}"),
-        ]
-        if with_folds:
-            cols += [
-                F.col("fold0").alias(f"fold0_{s}"),
-                F.col("fold1").alias(f"fold1_{s}"),
-            ]
-        sides.append(docs.select(*cols))
-    return sides[0], sides[1]
+def _set_binding(d: DataFrame, sets):
+    """(tok, sets_fn) for _set_pairs over the documents ``d`` and a
+    per-doc distinct-set expression ``sets`` (_TOKENS or _BIGRAMS):
+    the exploded (doc_id, token) relation, and a lazy builder of the
+    (doc_id, toks, n) sorted-array relation."""
 
-
-def _jaccard_pairs(
-    spark, sf_dir, candidates: DataFrame | None = None, threshold: float = 0.9
-) -> DataFrame:
-    """Exact word-set Jaccard over document pairs via JVM-side
-    array_intersect on per-doc token arrays — no token explode, no
-    O(rows²-per-token) shuffle (the naive inverted-index join measured
-    100×+ slower on dense vocabularies: every token co-occurs, so the
-    index prunes nothing and materializes ~n²·|vocab| join rows).
-
-    Without candidates: broadcast self-pair join with two cheap
-    prefilters evaluated before the intersect — doc_a < doc_b and the
-    size-ratio bound (Jaccard ≥ t ⇒ min(n)/max(n) ≥ t).
-    With candidates (the LSH verify path): only candidate pairs are
-    scored — the 100 TB shape, linear in true-dup density.
-    """
-    docs, kernel, screen_fn, n_chunks = _pair_kernel(
-        spark,
-        _doc_tokens(spark, sf_dir),
-        lambda: _token_sets(spark, sf_dir),
-    )
-    if candidates is None and n_chunks > 2:
-        # Full all-pairs sweep over WIDE bitmask docs: the tiled Arrow
-        # popcount kernel. BNLJ conditions evaluate interpreted, so a
-        # 16-word kernel pays ~2µs/pair there (26s at sf0.1); for 1-2
-        # word masks the interpreted condition is cheap enough that
-        # the BNLJ's JVM-pipelined output (no Arrow round-trip of the
-        # ~1M-pair result) wins instead — measured 1.5s vs 2.1s.
-        n_docs = load_table(spark, sf_dir, "documents").count()
-        return _tiled_bitmask_pairs(spark, docs, threshold, n_docs=n_docs)
-    if candidates is None:
-        # Spread the probe side across all cores: the fixture is one
-        # small parquet file (one input split), and a broadcast
-        # pair-join's parallelism equals the stream side's partition
-        # count. Only the broadcast all-pairs path needs this — the
-        # candidates path hash-exchanges da/db on the join keys
-        # anyway, so a round-robin repartition there would be a pure
-        # extra shuffle of the corpus.
-        docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    da, db = _pair_sides(docs, with_folds=screen_fn is not None)
-    size_ok = F.least("na", "nb") >= F.greatest("na", "nb") * F.lit(threshold)
-    if candidates is not None:
-        # Plain shuffle joins on the candidate keys (VERDICT r8 #2):
-        # da/db are the FULL corpus token relation, so an explicit
-        # F.broadcast here is a hard scale-killer at 10^9+ docs —
-        # hundreds of GB shipped to every executor. A plain equi-join
-        # shuffles only the candidate keys plus the corpus rows they
-        # touch, and AQE still picks broadcast-hash when a side is
-        # genuinely small (it is, at sf0.01-0.1 — same local plan,
-        # different 100 TB behavior). Shape copied from the proven
-        # shuffle-verify in dedup_embedding_cosine_lsh below.
-        pairs = (
-            candidates.join(da, "doc_a")
-            .join(db, "doc_b")
-            .filter(size_ok)  # cheap bound evaluated before the intersect
+    def sets_fn():
+        return d.select(
+            "doc_id",
+            F.array_sort(sets()).alias("toks"),
+            F.size(sets()).alias("n"),
         )
-        if screen_fn is not None:
-            pairs = pairs.filter(screen_fn(threshold))
-    else:
-        cond = (F.col("doc_a") < F.col("doc_b")) & size_ok
-        if screen_fn is not None:
-            cond = cond & screen_fn(threshold)
-        pairs = da.join(F.broadcast(db), cond)
-    return pairs.withColumn("n_shared", kernel).select(
-        "doc_a",
-        "doc_b",
-        (
-            F.col("n_shared") / (F.col("na") + F.col("nb") - F.col("n_shared"))
-        ).alias("jac"),
-    )
+
+    return d.select("doc_id", F.explode(sets()).alias("token")), sets_fn
+
+
+def _word_sets(spark, sf_dir):
+    """_set_binding over each document's distinct word set."""
+    return _set_binding(load_table(spark, sf_dir, "documents"), _TOKENS)
+
+
+def _bigram_sets(spark, sf_dir):
+    """_set_binding over each document's distinct word bigrams."""
+    return _set_binding(load_table(spark, sf_dir, "documents"), _BIGRAMS)
+
+
+def _doc_tokens(spark, sf_dir):
+    """(doc_id, token) pairs — distinct tokens per document."""
+    return _word_sets(spark, sf_dir)[0]
 
 
 # Vocabulary size up to which the dictionary is inlined as an array
@@ -197,47 +138,12 @@ _LITERAL_DICT_MAX_VOCAB = 256
 _BITMASK_MAX_VOCAB = 4096
 
 
-def _pair_kernel(spark, tok, sets_fn):
-    """Pick the exact set-intersection kernel by vocabulary size.
-
-    Small vocabulary (the corpus here has ~31 distinct tokens):
-    dictionary-encode each document's token set into a fixed-length
-    array of 64-bit masks; |A∩B| is then sum(bit_count(a & b)) —
-    word-wide bit ops in whole-stage codegen instead of a per-pair
-    string-array intersect. Exact by construction (dictionary ids,
-    no hashing), ~10x faster on the O(n²) pair loop.
-
-    Open vocabulary (the 100 TB text regime): fall back to
-    array_intersect on sorted token arrays. The one-pass distinct
-    count that makes the choice is noise next to the pair join it
-    feeds.
-
-    ``tok`` is the exploded (doc_id, token) relation; ``sets_fn``
-    lazily builds the (doc_id, toks, n) sorted-array fallback. Returns
-    (docs_df with (doc_id, toks, n), intersect_kernel Column over the
-    joined (toks_a, toks_b) columns).
-    """
-    # ONE bounded job decides the path AND fetches the dictionary
-    # (r13, guide §2.4): the distinct vocabulary is collected under a
-    # LIMIT of cap+1 rows — a driver transfer the same class as a
-    # broadcast side (≤4097 short strings), and strictly cheaper than
-    # the old probe-count + ranked-dictionary + encode-join + two
-    # groupBys, which cost three shuffles and a broadcast per call
-    # before any pair was scored. The moment the limit returns cap+1
-    # rows the corpus is open-vocab and the sorted-array kernel takes
-    # over, so the transfer stays bounded on any input.
-    vocab_rows = (
-        tok.select("token").distinct().limit(_BITMASK_MAX_VOCAB + 1)
-    ).collect()  # driver-scalar: bounded ≤ _BITMASK_MAX_VOCAB+1 rows by the limit
-    if len(vocab_rows) > _BITMASK_MAX_VOCAB:
-        return (
-            sets_fn(),
-            F.size(F.array_intersect("toks_a", "toks_b")),
-            None,
-            0,  # n_chunks = 0 → open-vocab fallback, no bitmasks
-        )
-    vocab = sorted(r[0] for r in vocab_rows)
-    n_chunks = (len(vocab) + 63) // 64
+def _bitmask_encode(spark, tok, sets_fn, vocab: list[str]) -> DataFrame:
+    """(doc_id, toks: array<bigint> mask words, n) over the sorted
+    dictionary ``vocab``: token id i sets bit i % 64 of word i // 64,
+    so |A∩B| is sum(bit_count(a & b)) over the words — exact by
+    construction (dictionary ids, no hashing)."""
+    n_words = (len(vocab) + 63) // 64
     if len(vocab) <= _LITERAL_DICT_MAX_VOCAB:
         # Map-only dictionary encode: the vocabulary rides into the
         # plan as an array literal, each document's tokens resolve to
@@ -264,7 +170,7 @@ def _pair_kernel(spark, tok, sets_fn):
                 f"IF(x >= {c * 64} AND x < {(c + 1) * 64}, "
                 "a | shiftleft(CAST(1 AS BIGINT), x % 64), a))"
             )
-            for c in range(n_chunks)
+            for c in range(n_words)
         ]
         masks = (
             sets_fn()
@@ -293,7 +199,7 @@ def _pair_kernel(spark, tok, sets_fn):
                     "CAST(0 AS BIGINT))"
                 )
             ).alias(f"m{c}")
-            for c in range(n_chunks)
+            for c in range(n_words)
         ]
         masks = (
             tok.join(F.broadcast(dict_df), "token")
@@ -302,74 +208,176 @@ def _pair_kernel(spark, tok, sets_fn):
             .selectExpr(
                 "doc_id",
                 "array("
-                + ",".join(f"m{c}" for c in range(n_chunks))
+                + ",".join(f"m{c}" for c in range(n_words))
                 + ") AS toks",
             )
         )
-    masks = masks.selectExpr(
+    return masks.selectExpr(
         "doc_id",
         "toks",
         "CAST(aggregate(toks, 0, (a, x) -> a + bit_count(x)) AS INT) AS n",
     )
-    if n_chunks > 2:
-        # Two 64-bit OR-folds of the chunk words (odd/even stripes),
+
+
+def _set_pairs(
+    spark,
+    tok: DataFrame,
+    sets_fn,
+    threshold: float,
+    *,
+    metric: str = "jaccard",
+    candidates: DataFrame | None = None,
+) -> DataFrame:
+    """Exact set-similarity pairs (doc_a, doc_b, score), score ≥
+    threshold (> 0) — the one pair sweep every set-similarity op
+    projects.
+
+    metric="jaccard": |A∩B| / |A∪B| over unordered pairs doc_a < doc_b.
+    metric="containment": |A∩B| / |A| over ordered pairs doc_a ≠ doc_b
+    (doc_a is the contained side). Empty sets score below any positive
+    threshold and are dropped up front. ``tok``/``sets_fn`` are a
+    _set_binding. With ``candidates`` (doc_a, doc_b) only those pairs
+    are scored, in the orientation given.
+
+    The kernel is chosen here, once, from what the input shows:
+    - One bounded job collects the distinct vocabulary under a LIMIT
+      of _BITMASK_MAX_VOCAB + 1 rows (≤4097 short strings, a transfer
+      the size of a broadcast side). Past the cap the corpus is open-
+      vocabulary and pairs intersect sorted token arrays
+      (array_intersect); otherwise every set is dictionary-encoded
+      into 64-bit mask words and |A∩B| is an unrolled bit_count sum.
+    - With candidates: plain shuffle joins on doc_a / doc_b, never a
+      broadcast hint — both sides are the FULL corpus set relation,
+      which at 10^9+ docs is hundreds of GB per executor (VERDICT r8
+      #2); AQE still broadcasts a side that is genuinely small. Over
+      masks wider than two words Jaccard pairs first pass the 2-word
+      fold screen.
+    - Without candidates over masks wider than two words: the tiled
+      Arrow/BLAS gemm (_tiled_bitmask_pairs). A nested-loop join's
+      condition runs interpreted, ~2 µs/pair for a 16-word kernel
+      (26 s at sf0.1 vs ~2 s tiled).
+    - Otherwise (1–2 mask words, or open vocabulary): a broadcast
+      nested-loop pair join over a repartitioned probe side, with the
+      metric's size bound ahead of the kernel. For 1–2-word masks the
+      interpreted condition is cheap and the JVM-pipelined output (no
+      Arrow round trip of the ~1M-pair result) wins — 1.5 s vs 2.1 s
+      tiled.
+    """
+    vocab_rows = (
+        tok.select("token").distinct().limit(_BITMASK_MAX_VOCAB + 1)
+    ).collect()  # driver-scalar: bounded ≤ _BITMASK_MAX_VOCAB+1 rows by the limit
+    if len(vocab_rows) > _BITMASK_MAX_VOCAB:
+        n_words = 0
+        docs = sets_fn()
+        kernel = F.size(F.array_intersect("toks_a", "toks_b"))
+    else:
+        n_words = (len(vocab_rows) + 63) // 64
+        docs = _bitmask_encode(
+            spark, tok, sets_fn, sorted(r[0] for r in vocab_rows)
+        )
+        # Unrolled per-word terms (n_words is a plan-time constant):
+        # straight-line bit_count(a[c] & b[c]) sums in whole-stage
+        # codegen, no per-pair intermediate array like
+        # zip_with+aggregate would allocate — measured ~2× on the
+        # 12.5M-pair sf0.1 join.
+        terms = [
+            F.bit_count(
+                F.element_at("toks_a", c).bitwiseAND(F.element_at("toks_b", c))
+            )
+            for c in range(1, n_words + 1)
+        ]
+        kernel = sum(terms[1:], start=terms[0]).cast("int")
+    if metric == "containment":
+        order = F.col("doc_a") != F.col("doc_b")
+        bound = F.col("nb") >= F.ceil(F.lit(threshold) * F.col("na"))
+        score = F.col("ns") / F.col("na")
+    else:
+        order = F.col("doc_a") < F.col("doc_b")
+        bound = F.least("na", "nb") >= F.greatest("na", "nb") * F.lit(threshold)
+        score = F.col("ns") / (F.col("na") + F.col("nb") - F.col("ns"))
+    folds = ()
+    if candidates is not None and n_words > 2 and metric == "jaccard":
+        # Two 64-bit OR-folds of the mask words (odd/even stripes),
         # precomputed per doc. bit_count(fold∩fold) summed over the two
         # folds is an UPPER BOUND on |A∩B|: each dictionary id occupies
         # one bit of one fold in both docs, and fold collisions only
-        # inflate the count. The screen below evaluates 2 words per
-        # pair instead of n_chunks, pruning pairs that cannot reach the
-        # Jaccard threshold before the full kernel runs — exact-safe.
-        f0 = f1 = None
-        for c in range(1, n_chunks + 1):
-            w = F.element_at(F.col("toks"), c)
-            if c % 2:
-                f0 = w if f0 is None else f0.bitwiseOR(w)
-            else:
-                f1 = w if f1 is None else f1.bitwiseOR(w)
-        masks = masks.select(
-            "*", f0.alias("fold0"), f1.alias("fold1")
+        # inflate the count. The screen evaluates 2 words per pair
+        # instead of n_words — exact-safe.
+        folds = ("fold0", "fold1")
+        docs = docs.select(
+            "*",
+            *[
+                F.expr(
+                    " | ".join(
+                        f"toks[{c}]" for c in range(f, n_words, 2)
+                    )
+                ).alias(name)
+                for f, name in enumerate(folds)
+            ],
         )
-    # eager: the pair join's sides (broadcast build + probe scan) race
-    # on the cold cache and each re-run the mask build otherwise (r13)
-    masks = track_persist(masks, eager=True)
-    # Unrolled per-chunk terms (n_chunks is a plan-time constant):
-    # straight-line bit_count(a[c] & b[c]) sums in whole-stage codegen,
-    # no per-pair intermediate array like zip_with+aggregate would
-    # allocate — measured ~2× on the 12.5M-pair sf0.1 join.
-    kernel = None
-    for c in range(1, n_chunks + 1):
-        term = F.bit_count(
-            F.element_at(F.col("toks_a"), c).bitwiseAND(
-                F.element_at(F.col("toks_b"), c)
+        # Jaccard ≥ t ⇔ |A∩B| ≥ t·(na+nb)/(1+t); keep the pair iff the
+        # fold upper bound can still clear that floor.
+        bound = bound & (
+            (
+                F.bit_count(F.col("fold0_a").bitwiseAND(F.col("fold0_b")))
+                + F.bit_count(F.col("fold1_a").bitwiseAND(F.col("fold1_b")))
             )
+            * F.lit(1.0 + threshold)
+            >= F.lit(threshold) * (F.col("na") + F.col("nb"))
         )
-        kernel = term if kernel is None else kernel + term
-
-    screen_fn = None
-    if n_chunks > 2:
-
-        def screen_fn(t: float):
-            # Jaccard ≥ t ⇔ n_shared ≥ t·(na+nb)/(1+t); keep the pair
-            # iff the fold upper bound can still clear that floor.
-            ub = F.bit_count(
-                F.col("fold0_a").bitwiseAND(F.col("fold0_b"))
-            ) + F.bit_count(F.col("fold1_a").bitwiseAND(F.col("fold1_b")))
-            return ub * F.lit(1.0 + t) >= F.lit(t) * (
-                F.col("na") + F.col("nb")
+    if n_words:
+        # eager: the pair join's sides (broadcast build + probe scan)
+        # race on the cold cache and each re-run the mask build
+        # otherwise (r13)
+        docs = track_persist(docs, eager=True)
+    # After the persist: pushed below it, the filter would re-run the
+    # whole mask encode to recompute n.
+    docs = docs.filter(F.col("n") > 0)
+    if candidates is None:
+        if n_words > 2:
+            # the parquet-footer count sizes the tile blocks
+            return _tiled_bitmask_pairs(
+                spark, docs, threshold, sets_fn().count(), metric
             )
+        # Spread the probe side across all cores: the fixture is one
+        # small parquet file (one input split), and a broadcast
+        # pair-join's parallelism equals the stream side's partition
+        # count. The candidates path hash-exchanges on the join keys
+        # anyway, so a round-robin repartition there would be a pure
+        # extra shuffle of the corpus.
+        docs = docs.repartition(spark.sparkContext.defaultParallelism)
 
-    return masks, kernel.cast("int"), screen_fn, n_chunks
+    def side(s):
+        return docs.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("toks").alias(f"toks_{s}"),
+            F.col("n").alias(f"n{s}"),
+            *[F.col(f).alias(f"{f}_{s}") for f in folds],
+        )
+
+    if candidates is None:
+        pairs = side("a").join(F.broadcast(side("b")), order & bound)
+    else:
+        pairs = (
+            candidates.join(side("a"), "doc_a")
+            .join(side("b"), "doc_b")
+            .filter(bound)
+        )
+    return (
+        pairs.withColumn("ns", kernel)
+        .select("doc_a", "doc_b", score.alias("score"))
+        .filter(F.col("score") >= threshold)
+    )
 
 
 @register("dedup_near_jaccard", oracle=_JACCARD_ORACLE, section=SECTION)
 def dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact near-dup pairs (word-set Jaccard ≥ 0.9) via inverted-index
-    self-join — the recall ground truth for the LSH path. Quadratic in
-    the worst case: verification-scale only."""
-    return (
-        _jaccard_pairs(spark, sf_dir)
-        .filter(F.col("jac") >= 0.9)
-        .select("doc_a", "doc_b", ratio(F.col("jac")).alias("jaccard"))
+    """Exact near-dup pairs (word-set Jaccard ≥ 0.9) via the all-pairs
+    set sweep (_set_pairs; the nested-loop bitmask kernel at the
+    fixture's 31-word vocabulary) — the recall ground truth for the
+    LSH path. Quadratic: verification-scale only."""
+    return _set_pairs(spark, *_word_sets(spark, sf_dir), 0.9).select(
+        "doc_a", "doc_b", ratio(F.col("score")).alias("jaccard")
     )
 
 
@@ -415,19 +423,15 @@ _CLUSTER_ORACLE = """
 _LSH_CROSSOVER_DOCS = 8192
 
 
-def _dup_pairs(
-    spark, sf_dir, *, pair_source: str, threshold: float = 0.9
-) -> DataFrame:
-    """Verified near-dup pairs (jac ≥ threshold) for the composites.
-
-    pair_source="auto" (the registered call sites' default): pick by
-    corpus size — the exact all-pairs gemm kernel below
-    _LSH_CROSSOVER_DOCS, MinHash-banded candidates + exact Jaccard
-    verify above it (linear in true-dup density, the 100 TB shape; a
-    1000-executor corpus always takes this branch). "lsh"/"exact"
-    force a path; the parity tests pin both paths identical on a
-    sub-crossover fixture AND on a supra-crossover corpus where auto
-    genuinely takes the lsh branch
+def _dup_pairs(spark, sf_dir, threshold: float = 0.9) -> DataFrame:
+    """Verified near-dup pairs (Jaccard ≥ threshold) for the composites,
+    picked by corpus size (the parquet-footer doc count): the exact
+    all-pairs sweep up to _LSH_CROSSOVER_DOCS, MinHash-banded
+    candidates + exact Jaccard verify above it (linear in true-dup
+    density, the 100 TB shape; a 1000-executor corpus always takes
+    this branch). The parity tests pin both paths identical on a
+    sub-crossover fixture AND on a supra-crossover corpus, forcing the
+    other branch by patching the crossover constant
     (tests/test_llm_ops.py::test_cluster_assign_lsh_matches_exact,
     ::test_dup_pairs_auto_lsh_above_crossover), and the composites'
     DuckDB oracles pin the exact ground truth every round. Both emit
@@ -441,30 +445,24 @@ def _dup_pairs(
     0.99988 per pair (vs 0.989), i.e. a borderline isolated pair must
     miss in all 16 independent bands to drop. The residual ~1e-4 rate
     is the documented, standard MinHash-dedup property at corpus
-    scale; at the oracle-gated fixture sizes auto takes the exact
-    branch, so the driver gate compares exact-vs-exact.
+    scale; at the oracle-gated fixture sizes the exact branch runs, so
+    the oracle gate compares exact-vs-exact.
     """
-    if pair_source == "auto":
-        n_docs = load_table(spark, sf_dir, "documents").count()  # footer-only
-        pair_source = "exact" if n_docs <= _LSH_CROSSOVER_DOCS else "lsh"
+    n_docs = load_table(spark, sf_dir, "documents").count()  # footer-only
     cands = (
         None
-        if pair_source == "exact"
+        if n_docs <= _LSH_CROSSOVER_DOCS
         else _minhash_candidates(
             spark, sf_dir, threshold, n_perm=2 * N_PERM, n_bands=2 * N_BANDS
         )
     )
-    return (
-        _jaccard_pairs(spark, sf_dir, cands, threshold)
-        .filter(F.col("jac") >= threshold)
-        .select("doc_a", "doc_b")
-    )
+    return _set_pairs(
+        spark, *_word_sets(spark, sf_dir), threshold, candidates=cands
+    ).select("doc_a", "doc_b")
 
 
 @register("dedup_cluster_assign", oracle=_CLUSTER_ORACLE, section=SECTION)
-def dedup_cluster_assign(
-    spark: SparkSession, sf_dir: str, pair_source: str = "auto"
-) -> DataFrame:
+def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup GROUP assignment — the step after pair finding: connected
     components over the near-dup graph, canonical doc = component-min
     doc_id, so a pipeline keeps exactly one representative per dup
@@ -483,9 +481,10 @@ def dedup_cluster_assign(
     Edges come from _dup_pairs' cost-based pair finding: past the
     measured crossover it takes the LSH-candidate + exact-verify path
     (banded MinHash buckets, no all-pairs sweep — the branch every
-    at-scale corpus takes); below it the exact gemm kernel, where the
-    LSH pipeline's fixed costs dominate. "lsh"/"exact" force a
-    path. A parity pytest pins LSH-fed output ≡ exact-fed
+    at-scale corpus takes); below it the exact all-pairs sweep, where
+    the LSH pipeline's fixed costs dominate. A parity pytest (which
+    forces each branch by patching _LSH_CROSSOVER_DOCS) pins LSH-fed
+    output ≡ exact-fed
     output at fixture scale (missing intra-clique edges cannot change
     connected components while the clique stays connected, and the
     banding's 0.989 admission at J=0.9 leaves cliques connected), and
@@ -517,7 +516,7 @@ def dedup_cluster_assign(
     # pairs persisted BEFORE the symmetric union — otherwise both union
     # branches recompute the whole pair-finding subtree.
     pairs = track_persist(
-        _dup_pairs(spark, sf_dir, pair_source=pair_source),
+        _dup_pairs(spark, sf_dir),
         eager=True,  # both union branches race on the cold cache (r13)
     )
     sym = pairs.union(
@@ -691,32 +690,16 @@ _NGRAM_ORACLE = """
 """
 
 
-def _BIGRAMS():
-    """Distinct word-bigram shingles of ``text`` (order-preserving).
-
-    zip_with(toks, toks[2:]) — NOT transform+element_at over an index
-    sequence, which re-evaluates the split closure per element (O(w²)
-    splits per row; measured 7× slower). zip_with pads the shorter
-    side with null, so the final bigram is (last_word, null) → null
-    concat → filtered."""
-    toks = F.split("text", " ")
-    grams = F.zip_with(
-        toks,
-        F.slice(toks, 2, F.size(toks) - 1),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
-    return F.array_distinct(F.filter(grams, lambda g: g.isNotNull()))
-
-
 def _tiled_bitmask_pairs(
     spark,
     masks_df: DataFrame,
     threshold: float,
-    n_docs: int | None = None,
-    metric: str = "jaccard",
+    n_docs: int,
+    metric: str,
 ) -> DataFrame:
     """Tiled all-pairs scoring over dictionary bitmasks: (doc_a, doc_b,
-    jac) for every pair with score ≥ threshold. metric="jaccard"
+    score) for every pair with score ≥ threshold — _set_pairs' kernel
+    for masks wider than two words. metric="jaccard"
     (symmetric, emits doc_a < doc_b) or "containment" (asymmetric
     |A∩B|/|A|, emits ORDERED pairs (contained, container) — both
     orientations of each tile are scored).
@@ -731,7 +714,8 @@ def _tiled_bitmask_pairs(
     tile and shuffles each block √tiles times; callers remain declared
     O(n²) exact twins (LSH ops are the scale path).
 
-    ``masks_df`` needs (doc_id, toks: array<bigint> bitmask words, n).
+    ``masks_df`` needs (doc_id, toks: array<bigint> bitmask words, n);
+    ``n_docs`` (the parquet-footer count) sizes the blocks.
     """
     import numpy as np
 
@@ -740,12 +724,6 @@ def _tiled_bitmask_pairs(
     # floor of 8 blocks keeps ≥36 concurrent tiles. The old fixed 32
     # blocks made 528 tiles even for 500 docs — per-tile Arrow/schedule
     # overhead dominated (measured 3.0s → 2.2s at sf0.1 with 8 blocks).
-    # Callers pass n_docs from the parquet footer count (free); the
-    # masks relation still persists because the self-join below reads
-    # the block relation twice (x and y aliases).
-    masks_df = track_persist(masks_df.select("doc_id", "toks", "n"))
-    if n_docs is None:
-        n_docs = masks_df.count()
     n_blocks = max(8, -(-n_docs // 600))
     block = (
         masks_df
@@ -842,12 +820,12 @@ def _tiled_bitmask_pairs(
                 {
                     "doc_a": np.concatenate([o[0] for o in outs]) if outs else empty,
                     "doc_b": np.concatenate([o[1] for o in outs]) if outs else empty,
-                    "jac": np.concatenate([o[2] for o in outs]) if outs else empty.astype(float),
+                    "score": np.concatenate([o[2] for o in outs]) if outs else empty.astype(float),
                 }
             )
 
     return tiles.mapInPandas(
-        tile_kernel, "doc_a bigint, doc_b bigint, jac double"
+        tile_kernel, "doc_a bigint, doc_b bigint, score double"
     )
 
 
@@ -874,39 +852,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays the declared O(n²) exact twin either way (dedup_minhash_lsh
     is the scale path).
 
-    Bigram vocabulary is O(word_vocab²); the bitmask path engages only
-    on small vocabularies (here 31 words → ≤961 bigrams → 16-long
-    masks). Open vocab falls back to the generic array_intersect join.
+    Bigram vocabulary is O(word_vocab²); _set_pairs picks the kernel
+    from it (here 31 words → ≤961 bigrams → 16-word masks → tiles;
+    open vocabularies intersect sorted arrays instead).
     """
-    d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(_BIGRAMS()).alias("token"))
-
-    def sets_fn():
-        return d.select(
-            "doc_id",
-            F.array_sort(_BIGRAMS()).alias("toks"),
-            F.size(_BIGRAMS()).alias("n"),
-        )
-
-    docs, kernel, _screen, n_chunks = _pair_kernel(spark, tok, sets_fn)
-    if n_chunks == 0:  # open vocabulary — generic sorted-array kernel
-        docs = docs.repartition(spark.sparkContext.defaultParallelism)
-        da, db = _pair_sides(docs, with_folds=False)
-        size_ok = F.least("na", "nb") >= F.greatest("na", "nb") * F.lit(0.5)
-        jac = F.col("n_shared") / (
-            F.col("na") + F.col("nb") - F.col("n_shared")
-        )
-        return (
-            da.join(F.broadcast(db), (F.col("doc_a") < F.col("doc_b")) & size_ok)
-            .withColumn("n_shared", kernel)
-            .withColumn("jac", jac)
-            .filter(F.col("jac") >= 0.5)
-            .select("doc_a", "doc_b", ratio(F.col("jac")).alias("jaccard"))
-        )
-
-    out = _tiled_bitmask_pairs(spark, docs, threshold=0.5, n_docs=d.count())
+    pairs = _set_pairs(spark, *_bigram_sets(spark, sf_dir), 0.5)
     # ratio() JVM-side: numpy rounding is half-even, DuckDB half-away
-    return out.select("doc_a", "doc_b", ratio(F.col("jac")).alias("jaccard"))
+    return pairs.select("doc_a", "doc_b", ratio(F.col("score")).alias("jaccard"))
 
 
 N_PERM = 64  # minhash permutations
@@ -1113,11 +1065,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
       already filters on the same evidence) while adding two joins.
     """
     candidates = _minhash_candidates(spark, sf_dir)
-    return (
-        _jaccard_pairs(spark, sf_dir, candidates)
-        .filter(F.col("jac") >= 0.9)
-        .select("doc_a", "doc_b", ratio(F.col("jac")).alias("jaccard"))
-    )
+    return _set_pairs(
+        spark, *_word_sets(spark, sf_dir), 0.9, candidates=candidates
+    ).select("doc_a", "doc_b", ratio(F.col("score")).alias("jaccard"))
 
 
 def _minhash_sig_df(
@@ -1324,15 +1274,13 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_a") % 10 == 0) & (F.col("doc_b") % 10 == 0),
         F.lit("new_new"),
     ).otherwise(F.lit("new_old"))
-    return (
-        _jaccard_pairs(spark, sf_dir, cand)
-        .filter(F.col("jac") >= threshold)
-        .select(
-            "doc_a",
-            "doc_b",
-            ratio(F.col("jac")).alias("jaccard"),
-            pair_type.alias("pair_type"),
-        )
+    return _set_pairs(
+        spark, *_word_sets(spark, sf_dir), threshold, candidates=cand
+    ).select(
+        "doc_a",
+        "doc_b",
+        ratio(F.col("score")).alias("jaccard"),
+        pair_type.alias("pair_type"),
     )
 
 
@@ -1380,14 +1328,12 @@ def text_fuzzy_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    return (
-        _jaccard_pairs(spark, sf_dir, cand, threshold)
-        .filter(F.col("jac") >= threshold)
-        .select(
-            F.col("doc_b").alias("doc_id"),
-            F.col("doc_a").alias("eval_doc_id"),
-            ratio(F.col("jac")).alias("jaccard"),
-        )
+    return _set_pairs(
+        spark, *_word_sets(spark, sf_dir), threshold, candidates=cand
+    ).select(
+        F.col("doc_b").alias("doc_id"),
+        F.col("doc_a").alias("eval_doc_id"),
+        ratio(F.col("score")).alias("jaccard"),
     )
 
 
@@ -3084,9 +3030,7 @@ _KEEP_BEST_ORACLE = _CLUSTER_ORACLE.replace(
 
 
 @register("dedup_keep_best", oracle=_KEEP_BEST_ORACLE, section=SECTION)
-def dedup_keep_best(
-    spark: SparkSession, sf_dir: str, pair_source: str = "auto"
-) -> DataFrame:
+def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup pipeline's final step: pick ONE representative per
     near-dup cluster (longest text wins, min doc_id breaks ties) —
     the output corpus is exactly these keepers. Composes
@@ -3098,7 +3042,7 @@ def dedup_keep_best(
     partitions (bounded by dup-cluster size, not corpus size); the
     ranking sort is partition-local. Oracle recomputes the same
     clusters via the recursive CTE and the same argmax."""
-    assign = dedup_cluster_assign(spark, sf_dir, pair_source).select(
+    assign = dedup_cluster_assign(spark, sf_dir).select(
         "doc_id", "canonical_id"
     )
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
@@ -3347,9 +3291,7 @@ _CLEAN_PIPELINE_ORACLE = _CLUSTER_ORACLE.replace(
 @register(
     "text_clean_pipeline", oracle=_CLEAN_PIPELINE_ORACLE, section=SECTION
 )
-def text_clean_pipeline(
-    spark: SparkSession, sf_dir: str, pair_source: str = "auto"
-) -> DataFrame:
+def text_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end cleaning job, composed from this module's own
     stages: near-dup clusters → one keeper per cluster (longest text,
     dedup_keep_best's rule) → heuristic quality gate
@@ -3365,7 +3307,7 @@ def text_clean_pipeline(
     keeper rank, map-only quality predicates, and a final
     low-cardinality (lang, source) rollup. A left-semi join applies
     the keeper set without widening rows."""
-    keepers = dedup_keep_best(spark, sf_dir, pair_source).select(
+    keepers = dedup_keep_best(spark, sf_dir).select(
         F.col("keeper_doc_id").alias("doc_id")
     )
     d = load_table(spark, sf_dir, "documents")
@@ -4246,11 +4188,12 @@ def text_similar_docs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """"More like this" — each document's top-3 nearest neighbors by
     word-set Jaccard (threshold 0.5, deterministic tiebreak): the
     related-documents listing a curator or search UI renders next to
-    every hit. Rides the exact pair kernel (gemm bitmask sweep at
-    fixture vocab, candidates path at open vocab), symmetrizes the
-    a<b pairs, and ranks within each doc's threshold-bounded
-    neighbor list — partitions are neighbor-list-sized, never corpus-
-    sized. The oracle recomputes the full n² relation relationally."""
+    every hit. Rides the exact all-pairs set sweep (_set_pairs: the
+    nested-loop bitmask kernel at the fixture's 31-word vocabulary),
+    symmetrizes the a<b pairs, and ranks within each doc's
+    threshold-bounded neighbor list — partitions are neighbor-list-
+    sized, never corpus-sized. The oracle recomputes the full n²
+    relation relationally."""
     # Persisted BEFORE the symmetric union (r13, guide §2.4 — same fix
     # dedup_cluster_assign carries): without it BOTH unionAll branches
     # re-execute the entire all-pairs kernel sweep — profiled as two
@@ -4259,18 +4202,16 @@ def text_similar_docs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # NOT eager (r13 A/B): the duplicated kernel sweep is a wide
         # 64-task stage — the union branches' race runs concurrently
         # on idle cores; an up-front count() serialized it (+0.8 s).
-        _jaccard_pairs(spark, sf_dir, threshold=0.5).filter(
-            F.col("jac") >= 0.5
-        )
+        _set_pairs(spark, *_word_sets(spark, sf_dir), 0.5)
     )
-    sym = pairs.select("doc_a", "doc_b", "jac").unionAll(
+    sym = pairs.unionAll(
         pairs.select(
             F.col("doc_b").alias("doc_a"),
             F.col("doc_a").alias("doc_b"),
-            "jac",
+            "score",
         )
     )
-    w = Window.partitionBy("doc_a").orderBy(F.col("jac").desc(), "doc_b")
+    w = Window.partitionBy("doc_a").orderBy(F.col("score").desc(), "doc_b")
     return (
         sym.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= 3)
@@ -4278,7 +4219,7 @@ def text_similar_docs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_a").alias("doc_id"),
             F.col("doc_b").alias("other_id"),
             F.col("rnk").cast("int").alias("rnk"),
-            ratio(F.col("jac")).alias("jaccard"),
+            ratio(F.col("score")).alias("jaccard"),
         )
     )
 
@@ -4317,56 +4258,30 @@ def text_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the contained doc_a).
 
     Bigram shingles (not word sets) so reorderings don't count as
-    containment. Pair loop: the tiled bitmask gemm kernel in
-    containment mode (asymmetric — the intersection matrix one tile
-    computes serves BOTH orientations, divided by |row| or |col|),
-    falling back to the generic sorted-array pair join on open
-    vocabularies with the one admissible prefilter (|B| >= 0.8|A| —
-    the container can be arbitrarily LARGER, so no symmetric
-    size-ratio bound exists). Declared exact all-pairs twin either
-    way; at scale superset-search needs a different sketch than the
-    Jaccard composites' banded MinHash (bottom-k containment
-    minhash), documented, not faked."""
-    d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(_BIGRAMS()).alias("token"))
+    containment. Pair loop: _set_pairs in containment mode — at the
+    fixture's 961 bigrams the tiled gemm kernel (asymmetric: the
+    intersection matrix one tile computes serves BOTH orientations,
+    divided by |row| or |col|); on open vocabularies the sorted-array
+    pair join with the one admissible prefilter (|B| >= 0.8|A| — the
+    container can be arbitrarily LARGER, so no symmetric size-ratio
+    bound exists). Declared exact all-pairs twin either way; at scale
+    superset-search needs a different sketch than the Jaccard
+    composites' banded MinHash (bottom-k containment minhash),
+    documented, not faked."""
+    return _containment_rows(
+        _set_pairs(
+            spark, *_bigram_sets(spark, sf_dir), 0.8, metric="containment"
+        )
+    )
 
-    def sets_fn():
-        return d.select(
-            "doc_id",
-            F.array_sort(_BIGRAMS()).alias("toks"),
-            F.size(_BIGRAMS()).alias("n"),
-        )
 
-    docs, kernel, _screen, n_chunks = _pair_kernel(spark, tok, sets_fn)
-    docs = docs.filter(F.col("n") > 0)
-    if n_chunks == 0:  # open vocabulary — generic sorted-array kernel
-        da, db = _pair_sides(
-            docs.repartition(spark.sparkContext.defaultParallelism),
-            with_folds=False,
-        )
-        out = (
-            da.join(
-                F.broadcast(db),
-                (F.col("doc_a") != F.col("doc_b"))
-                & (F.col("nb") >= F.ceil(F.lit(0.8) * F.col("na"))),
-            )
-            .withColumn("ns", kernel)
-            .filter(F.col("ns") * F.lit(1.0) / F.col("na") >= 0.8)
-            .select(
-                "doc_a",
-                "doc_b",
-                (F.col("ns") * F.lit(1.0) / F.col("na")).alias("jac"),
-            )
-        )
-    else:
-        out = _tiled_bitmask_pairs(
-            spark, docs, 0.8, n_docs=d.count(), metric="containment"
-        )
-    return out.select(
+def _containment_rows(pairs: DataFrame) -> DataFrame:
+    """The containment ops' output projection of _set_pairs rows."""
+    return pairs.select(
         "doc_a",
         "doc_b",
-        ratio(F.col("jac")).alias("containment"),
-        (F.col("jac") >= 1.0).alias("is_full"),
+        ratio(F.col("score")).alias("containment"),
+        (F.col("score") >= 1.0).alias("is_full"),
     )
 
 
@@ -4624,23 +4539,14 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     section=SECTION,
 )
-def text_containment_prefix_join(
-    spark: SparkSession, sf_dir: str, strategy: str = "auto"
-) -> DataFrame:
+def text_containment_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SCALE path for containment search — and unlike the MinHash
     banding of the Jaccard composites it is EXACT-COMPLETE, no recall
-    caveat: prefix filtering (the PPJoin family's pigeonhole bound).
-    C(A→B) >= 0.8 means at most floor(0.2|A|) of A's shingles are
-    missing from B, so among A's floor(0.2|A|)+1 globally-RAREST
-    shingles at least one must appear in B — candidates are the pairs
-    sharing such a prefix shingle, found by joining A-prefixes
-    against the full inverted index. Rare-first ordering makes the
-    probed postings the SHORT ones, so candidate volume tracks
-    rare-token co-occurrence, not n². Exact verify runs only on
-    candidates (same intersect kernel as the all-pairs twin); a
-    parity pytest pins this plan's output identical to
-    text_containment_dedup's tiled kernel, and the same DuckDB oracle
-    gates both.
+    caveat: prefix filtering (the PPJoin family's pigeonhole bound,
+    _prefix_candidates). Exact verify runs only on candidates, through
+    the same _set_pairs sweep as the all-pairs twin; a parity pytest
+    pins the prefix candidates' output identical to
+    text_containment_dedup's, and the same DuckDB oracle gates both.
 
     Shape at 100 TB: one vocab-bounded frequency agg, one window rank
     per doc (partitioned by doc_id), one inverted-index equi-join on
@@ -4651,54 +4557,45 @@ def text_containment_prefix_join(
     the size bound pushed BEFORE the candidate distinct so ineligible
     pairs never enter that shuffle.
 
-    Cost-based strategy (strategy="auto", the registered default):
-    prefix filtering wins exactly when rare shingles ARE rare. Its
-    candidate volume is ~0.2·Σ_t df(t)² (the prefix-restricted
-    inverted-index join size), so when that estimate exceeds the
-    all-pairs count n²/2 — true on this fixture's adversarially dense
-    vocabulary, where the "rarest" bigram still has df≈n/3 and the
-    estimate is ~20× all-pairs — the op routes to the tiled gemm twin
-    instead, the same decision a set-similarity join planner makes
-    from the same statistics. Both estimates come from relations the
-    op computes anyway (one extra 2-scalar action over the
-    vocab-bounded df aggregate). strategy="prefix"/"allpairs" force a
-    path; the parity pytest runs "prefix" explicitly, so the scale
-    plan stays exercised and output-pinned even while auto picks the
-    cheaper plan at fixture density."""
-    d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(_BIGRAMS()).alias("token"))
-
-    def sets_fn():
-        return d.select(
-            "doc_id",
-            F.array_sort(_BIGRAMS()).alias("toks"),
-            F.size(_BIGRAMS()).alias("n"),
+    Cost-based: prefix filtering wins exactly when rare shingles ARE
+    rare. Its candidate volume is ~0.2·Σ_t df(t)² (the
+    prefix-restricted inverted-index join size), so when that estimate
+    exceeds the all-pairs count n²/2 — true on this fixture's
+    adversarially dense vocabulary, where the "rarest" bigram still
+    has df≈n/3 and the estimate is ~20× all-pairs — the op takes the
+    all-pairs sweep instead (_set_pairs without candidates), the same
+    decision a set-similarity join planner makes from the same
+    statistics. n is the parquet-footer doc count and Σdf² one
+    scalar action over the vocab-bounded df aggregate."""
+    tok, sets_fn = _bigram_sets(spark, sf_dir)
+    n_docs = load_table(spark, sf_dir, "documents").count()  # footer-only
+    est = (
+        tok.groupBy("token").count().agg(F.sum(F.col("count") * F.col("count")))
+    ).collect()[0][0]  # driver-scalar: one 8-byte cost estimate
+    dense = est is not None and 0.2 * est > n_docs * n_docs / 2
+    cands = None if dense else _prefix_candidates(tok, sets_fn)
+    return _containment_rows(
+        _set_pairs(
+            spark, tok, sets_fn, 0.8, metric="containment", candidates=cands
         )
+    )
 
-    docs, kernel, _screen, n_chunks = _pair_kernel(spark, tok, sets_fn)
-    docs = docs.filter(F.col("n") > 0)
-    sizes = docs.select("doc_id", "n")
+
+def _prefix_candidates(tok: DataFrame, sets_fn) -> DataFrame:
+    """(doc_a, doc_b) pairs that can reach containment C(A→B) ≥ 0.8,
+    by prefix filtering: at most floor(0.2|A|) of A's shingles are
+    missing from B, so among A's floor(0.2|A|)+1 globally-RAREST
+    shingles at least one must appear in B —
+    candidates are the pairs sharing such a prefix shingle, found by
+    joining A-prefixes against the full inverted index. Rare-first
+    ordering makes the probed postings the SHORT ones, so candidate
+    volume tracks rare-token co-occurrence, not n². ``tok``/``sets_fn``
+    are a _set_binding."""
+    sizes = sets_fn().filter(F.col("n") > 0).select("doc_id", "n")
     # Global shingle rarity: document frequency, ties broken by token
     # text — a vocab-bounded aggregate (same discipline as the
     # bitmask dictionary's vocab sort).
     df_ = tok.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    if strategy == "auto":
-        n_docs = d.count()  # parquet footer count
-        est = df_.agg(
-            F.sum(F.col("df") * F.col("df")).alias("sq")
-        ).collect()[0][0]  # driver-scalar: one 8-byte cost estimate
-        if est is not None and 0.2 * est > n_docs * n_docs / 2:
-            strategy = "allpairs"
-    if strategy == "allpairs" and n_chunks > 0:
-        out = _tiled_bitmask_pairs(
-            spark, docs, 0.8, n_docs=None, metric="containment"
-        )
-        return out.select(
-            "doc_a",
-            "doc_b",
-            ratio(F.col("jac")).alias("containment"),
-            (F.col("jac") >= 1.0).alias("is_full"),
-        )
     # df_ is vocab-bounded → broadcast stays; sizes is CORPUS-sized
     # (one row per doc) → plain join, AQE broadcasts it while small
     # (the window rank shuffles on doc_id right after anyway).
@@ -4721,7 +4618,7 @@ def text_containment_prefix_join(
     b_index = tok.join(sizes, "doc_id").select(
         F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"), "token"
     )
-    cands = (
+    return (
         a_prefix.join(b_index, "token")
         .filter(
             (F.col("doc_a") != F.col("doc_b"))
@@ -4729,33 +4626,6 @@ def text_containment_prefix_join(
         )
         .select("doc_a", "doc_b")
         .distinct()
-    )
-    da = docs.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("toks").alias("toks_a"),
-        F.col("n").alias("na"),
-    )
-    db = docs.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("toks").alias("toks_b"),
-        F.col("n").alias("nb"),
-    )
-    # Plain joins on the candidate keys — da/db are full-corpus
-    # relations, never explicitly broadcast (VERDICT r8 #2); AQE
-    # broadcasts when a side is actually small.
-    return (
-        cands.join(da, "doc_a")
-        .join(db, "doc_b")
-        .withColumn("ns", kernel)
-        .filter(F.col("ns") * F.lit(1.0) / F.col("na") >= 0.8)
-        .select(
-            "doc_a",
-            "doc_b",
-            ratio(F.col("ns") * F.lit(1.0) / F.col("na")).alias(
-                "containment"
-            ),
-            (F.col("ns") == F.col("na")).alias("is_full"),
-        )
     )
 
 

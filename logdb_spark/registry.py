@@ -64,9 +64,9 @@ _LOADED = False
 # tuple below is `python -m tools.staleness --tuple` output verbatim
 # (stale-first from the CORRECTNESS_r*.json ledger): the r13 rotation
 # retired the r4 tail, so the head is now the remaining r5 bucket
-# (26 ops) followed by the oldest of the r7 bucket. The 50-cap
-# samples all 26 r5 ops plus the first 24 r7 ops — after this round
-# no operator's driver evidence is older than r7.
+# (26 ops) followed by the whole r7 bucket (34 ops), 60 names in
+# all. The 50-cap samples all 26 r5 ops plus the first 24 r7 ops; the
+# last 10 r7 ops carry over to the next round's head.
 _R14_NEEDS_ROW_FIRST = (
     "log_change_point",  # r5
     "log_cohort_ltv",  # r5
@@ -129,7 +129,6 @@ _R14_NEEDS_ROW_FIRST = (
     "sql_pivot_clause",  # r7
     "sql_q11_important_stock",  # r7
 )
-
 
 
 def _enumeration_order(ops: dict[str, Operator]) -> list[str]:

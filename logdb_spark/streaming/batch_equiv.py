@@ -1168,7 +1168,7 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         # unbounded corpus-so-far with an explicit broadcast).
         #
         # Fast-path payload (same trick as the batch twin's
-        # _pair_kernel): when the seen vocabulary fits one 64-bit
+        # _set_pairs): when the seen vocabulary fits one 64-bit
         # word, dictionary-encode each doc's token set into a long and
         # |A∩B| = bit_count(a & b) — word-wide codegen instead of a
         # per-pair array intersect. The bit is built JVM-side with

@@ -36,37 +36,43 @@ def test_minhash_lsh_recall(spark):
     assert recall >= 0.95, f"LSH recall {recall:.3f} < 0.95 ({len(truth)} true)"
 
 
-def test_cluster_assign_lsh_matches_exact(spark):
+def test_cluster_assign_lsh_matches_exact(spark, monkeypatch):
     """VERDICT r4 #1: the dedup composites consume LSH candidate pairs
-    by default — this pins LSH-fed connected components ≡ exact-fed at
-    fixture scale (an intra-clique edge the banding drops cannot change
-    components while the clique stays connected; re-verified at sf0.01
-    and sf0.1 during the r5 rewire). The DuckDB oracle independently
-    pins the exact ground-truth components each round."""
+    past _LSH_CROSSOVER_DOCS — this pins LSH-fed connected components ≡
+    exact-fed at fixture scale (an intra-clique edge the banding drops
+    cannot change components while the clique stays connected;
+    re-verified at sf0.01 and sf0.1 during the r5 rewire). The fixture
+    takes the exact branch by size; patching the crossover to 0 forces
+    the LSH branch. The DuckDB oracle independently pins the exact
+    ground-truth components each round."""
+    from logdb_spark.operators import llm
     from logdb_spark.operators.llm import dedup_cluster_assign
 
-    exact = dedup_cluster_assign(spark, SF_SMALL, "exact").orderBy("doc_id")
-    lsh = dedup_cluster_assign(spark, SF_SMALL, "lsh").orderBy("doc_id")
-    assert exact.collect() == lsh.collect()
+    exact = dedup_cluster_assign(spark, SF_SMALL).orderBy("doc_id").collect()
+    monkeypatch.setattr(llm, "_LSH_CROSSOVER_DOCS", 0)
+    lsh = dedup_cluster_assign(spark, SF_SMALL).orderBy("doc_id").collect()
+    assert exact == lsh
 
 
-def test_dup_pairs_auto_lsh_above_crossover(spark, tmp_path):
+def test_dup_pairs_auto_lsh_above_crossover(spark, tmp_path, monkeypatch):
     """ADVICE r5 (medium): the sub-crossover parity test above takes
-    the exact branch for pair_source="auto" by fixture size, so the
-    auto→lsh switch the composites rely on at scale was never
-    exercised end-to-end. Build a corpus that genuinely exceeds
-    _LSH_CROSSOVER_DOCS — the 500 fixture docs plus ~8.3k filler docs
+    the exact branch by fixture size, so the size-driven switch to lsh
+    the composites rely on at scale was never exercised end-to-end.
+    Build a corpus that genuinely exceeds _LSH_CROSSOVER_DOCS — the
+    500 fixture docs plus ~8.3k filler docs
     over a DISJOINT 40-token vocabulary, every filler exactly 10
     distinct tokens, so (a) filler×original Jaccard is 0, (b) a
     filler×filler pair can reach J≥0.9 only as an identical token set
     (|A|=|B|=10 ⇒ J≥0.9 ⇒ |A∩B|≥9.47 ⇒ A=B), which LSH admits
     deterministically (equal signatures agree in every band), and (c)
     the combined 71-token vocabulary keeps the exact side on the
-    bitmask gemm kernel. Parity of auto (→lsh here) vs forced exact is
-    then a real certificate for the branch every at-scale corpus
-    takes; hashing is seed-fixed, so this pins forever."""
+    bitmask kernel. Parity of the size-picked lsh branch vs the exact
+    branch (forced by patching the crossover above n) is then a real
+    certificate for the branch every at-scale corpus takes; hashing is
+    seed-fixed, so this pins forever."""
     import random
 
+    from logdb_spark.operators import llm
     from logdb_spark.operators.llm import (
         _LSH_CROSSOVER_DOCS,
         dedup_cluster_assign,
@@ -88,10 +94,11 @@ def test_dup_pairs_auto_lsh_above_crossover(spark, tmp_path):
         f"{big_dir}/documents.parquet"
     )
     n_docs = spark.read.parquet(f"{big_dir}/documents.parquet").count()
-    assert n_docs > _LSH_CROSSOVER_DOCS  # auto genuinely picks lsh
-    auto = dedup_cluster_assign(spark, big_dir, "auto").orderBy("doc_id")
-    exact = dedup_cluster_assign(spark, big_dir, "exact").orderBy("doc_id")
-    assert auto.collect() == exact.collect()
+    assert n_docs > _LSH_CROSSOVER_DOCS  # the size rule genuinely picks lsh
+    lsh = dedup_cluster_assign(spark, big_dir).orderBy("doc_id").collect()
+    monkeypatch.setattr(llm, "_LSH_CROSSOVER_DOCS", n_docs)
+    exact = dedup_cluster_assign(spark, big_dir).orderBy("doc_id").collect()
+    assert lsh == exact
 
 
 def test_lsh_planted_pairs_recall_above_crossover(spark, tmp_path):
@@ -99,7 +106,7 @@ def test_lsh_planted_pairs_recall_above_crossover(spark, tmp_path):
     proven against an ADVERSARIAL corpus instead of fixture luck.
 
     4,300 planted near-dup pairs (8,600 docs > _LSH_CROSSOVER_DOCS, so
-    pair_source='auto' genuinely takes the lsh branch) where each pair
+    _dup_pairs genuinely takes the lsh branch) where each pair
     is an ISOLATED 2-clique — the worst case for banding, because a
     clique of size ≥3 survives a dropped edge but a pair doesn't. Each
     pair draws 21 tokens from its own disjoint vocabulary: doc A =
@@ -127,9 +134,9 @@ def test_lsh_planted_pairs_recall_above_crossover(spark, tmp_path):
         "doc_id bigint, text string, lang string, source string,"
         " n_chars bigint",
     ).repartition(16).write.parquet(f"{corpus}/documents.parquet")
-    assert 2 * n_pairs > _LSH_CROSSOVER_DOCS  # auto picks lsh
+    assert 2 * n_pairs > _LSH_CROSSOVER_DOCS  # the size rule picks lsh
 
-    found = _pairs(_dup_pairs(spark, corpus, pair_source="auto"))
+    found = _pairs(_dup_pairs(spark, corpus))
     planted = {(2 * i, 2 * i + 1) for i in range(n_pairs)}
     assert found <= planted, f"false positives: {sorted(found - planted)[:5]}"
     recall = len(found) / n_pairs
@@ -306,24 +313,129 @@ def test_containment_prefix_join_matches_allpairs(spark):
     the pigeonhole prefix bound is exact-COMPLETE, so the outputs must
     be identical, not merely high-recall."""
     from logdb_spark.operators.llm import (
+        _bigram_sets,
+        _containment_rows,
+        _prefix_candidates,
+        _set_pairs,
         text_containment_dedup,
         text_containment_prefix_join,
     )
 
-    cols = ["doc_a", "doc_b", "containment", "is_full"]
     allpairs = sorted(
         tuple(r) for r in text_containment_dedup(spark, SF_SMALL).collect()
     )
-    # Force the prefix plan: auto's cost model routes this adversarially
-    # dense fixture to the tiled twin, and the parity claim is about
-    # the prefix PLAN, so pin it explicitly.
-    prefix = sorted(
-        tuple(r)
-        for r in text_containment_prefix_join(spark, SF_SMALL, "prefix")
-        .select(*cols)
-        .collect()
+    # The op's cost model routes this adversarially dense fixture to
+    # the all-pairs sweep, and the parity claim is about the prefix
+    # PLAN, so run its candidates through _set_pairs explicitly.
+    tok, sets_fn = _bigram_sets(spark, SF_SMALL)
+    prefix = _containment_rows(
+        _set_pairs(
+            spark, tok, sets_fn, 0.8, metric="containment",
+            candidates=_prefix_candidates(tok, sets_fn),
+        )
     )
-    assert allpairs == prefix
+    assert allpairs == sorted(tuple(r) for r in prefix.collect())
+    assert sorted(
+        tuple(r) for r in text_containment_prefix_join(spark, SF_SMALL).collect()
+    ) == allpairs
+
+
+def _plan_text(df):
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "simple"
+    )
+
+
+def test_set_pairs_every_branch_matches_reference(spark, monkeypatch):
+    """_set_pairs picks its kernel from the input, and the fixture only
+    reaches some branches (31 words, 961 bigrams). Over a generated
+    corpus with planted near-duplicates (one token swapped) and
+    excerpts (~15% of tokens dropped), run every branch for both
+    metrics — the nested-loop bitmask kernel (≤128 tokens), the tiled
+    gemm (wider masks), open vocabulary (_BITMASK_MAX_VOCAB patched
+    below the vocabulary) and candidates (with the Jaccard fold screen
+    over wide masks) — and compare each with a pure-Python reference
+    over the same token sets."""
+    import random
+
+    from logdb_spark.operators import llm
+    from logdb_spark.operators.llm import _TOKENS, _set_binding, _set_pairs
+
+    rng = random.Random(7)
+
+    def corpus(n_vocab):
+        vocab = [f"w{i:03d}" for i in range(n_vocab)]
+        sets = []
+        for _ in range(50):
+            base = rng.sample(vocab, rng.randint(10, 25))
+            swapped = base[1:] + [rng.choice([t for t in vocab if t not in base])]
+            excerpt = base[: len(base) - max(1, len(base) * 15 // 100)]
+            sets += [base, swapped, excerpt]
+        sets += [rng.sample(vocab, rng.randint(5, 25)) for _ in range(20)]
+        ids = rng.sample(range(10, 10_000), len(sets))
+        return {i: set(s) for i, s in zip(ids, sets)}
+
+    def reference(sets, metric, t, pairs):
+        out = set()
+        for a, b in pairs:
+            ns = len(sets[a] & sets[b])
+            den = len(sets[a]) if metric == "containment" else len(sets[a] | sets[b])
+            if ns / den >= t:
+                out.add((a, b, ns / den))
+        return out
+
+    def cand_rule(a, b):
+        return a != b and (7 * a + b) % 3 != 0
+
+    narrow, wide = corpus(100), corpus(300)
+    for sets, cases in (
+        (narrow, [("nested", None), ("open", None), ("open", "cands")]),
+        (wide, [("tiled", None), ("bitmask", "cands")]),
+    ):
+        d = spark.createDataFrame(
+            [(i, " ".join(sorted(s))) for i, s in sets.items()],
+            "doc_id bigint, text string",
+        )
+        tok, sets_fn = _set_binding(d, _TOKENS)
+        ids = d.select("doc_id")
+        cands = (
+            ids.alias("x")
+            .crossJoin(ids.alias("y"))
+            .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
+            .filter(
+                (F.col("doc_a") != F.col("doc_b"))
+                & ((7 * F.col("doc_a") + F.col("doc_b")) % 3 != 0)
+            )
+        )
+        for branch, with_cands in cases:
+            if branch == "open":
+                monkeypatch.setattr(llm, "_BITMASK_MAX_VOCAB", 50)
+            for metric, t in (("jaccard", 0.6), ("containment", 0.8)):
+                if with_cands:
+                    pairs = [(a, b) for a in sets for b in sets if cand_rule(a, b)]
+                elif metric == "jaccard":
+                    pairs = [(a, b) for a in sets for b in sets if a < b]
+                else:
+                    pairs = [(a, b) for a in sets for b in sets if a != b]
+                df = _set_pairs(
+                    spark, tok, sets_fn, t, metric=metric,
+                    candidates=cands if with_cands else None,
+                )
+                plan = _plan_text(df)
+                if branch == "nested":
+                    assert "BroadcastNestedLoopJoin" in plan
+                    assert "MapInPandas" not in plan
+                elif branch == "tiled":
+                    assert "MapInPandas" in plan
+                elif branch == "open":
+                    assert "array_intersect" in plan
+                else:
+                    assert ("fold0" in plan) == (metric == "jaccard")
+                got = {(r[0], r[1], r[2]) for r in df.collect()}
+                want = reference(sets, metric, t, pairs)
+                assert len(want) >= 50, (branch, metric, len(want))
+                assert got == want, (branch, metric, with_cands)
+            monkeypatch.undo()
 
 
 def test_incremental_minhash_matches_batch_restriction(spark):
@@ -614,25 +726,25 @@ def test_bpe_aligned_tracks_true_greedy_within_band(spark, tmp_path):
 
 
 def test_pair_kernel_encode_paths_identical(spark):
-    """r13 optimization: _pair_kernel grew two dictionary-encode paths
-    (inline array-literal lookup for tiny vocabularies, driver-built
-    broadcast dictionary + one-groupBy fold above
-    _LITERAL_DICT_MAX_VOCAB). Both must produce identical mask
-    relations — same chunk words, same popcounts — since every Jaccard
-    op's result flows through them. Force each path over the same
-    fixture corpus and compare the full relation."""
+    """r13 optimization: the pair sweep's dictionary encode
+    (_bitmask_encode) has two paths (inline array-literal lookup for
+    tiny vocabularies, driver-built broadcast dictionary + one-groupBy
+    fold above _LITERAL_DICT_MAX_VOCAB). Both must produce identical
+    mask relations — same chunk words, same popcounts — since every
+    set-similarity op's result flows through them. Force each path
+    over the same fixture corpus and compare the full relation."""
     from logdb_spark.operators import llm
-    from logdb_spark.operators.llm import _doc_tokens, _pair_kernel, _token_sets
+    from logdb_spark.operators.llm import _bitmask_encode, _word_sets
+
+    tok, sets_fn = _word_sets(spark, SF_SMALL)
+    vocab = sorted(r[0] for r in tok.select("token").distinct().collect())
+    assert len(vocab) <= llm._BITMASK_MAX_VOCAB  # the bitmask gate holds
 
     def masks_with(cap):
         old = llm._LITERAL_DICT_MAX_VOCAB
         llm._LITERAL_DICT_MAX_VOCAB = cap
         try:
-            docs, _k, _s, n_chunks = _pair_kernel(
-                spark, _doc_tokens(spark, SF_SMALL),
-                lambda: _token_sets(spark, SF_SMALL),
-            )
-            assert n_chunks >= 1  # the bitmask gate must hold on the fixture
+            docs = _bitmask_encode(spark, tok, sets_fn, vocab)
             return sorted(
                 (r["doc_id"], tuple(r["toks"]), r["n"]) for r in docs.collect()
             )

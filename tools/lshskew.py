@@ -111,9 +111,10 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from logdb_spark.operators.llm import (
-        _jaccard_pairs,
         _minhash_bands,
         _minhash_candidates,
+        _set_pairs,
+        _word_sets,
     )
     from logdb_spark.plans.session import get_spark
 
@@ -128,8 +129,8 @@ def main() -> int:
 
         def pipeline():
             cand = _minhash_candidates(spark, scratch)
-            return _jaccard_pairs(spark, scratch, cand).filter(
-                F.col("jac") >= 0.9
+            return _set_pairs(
+                spark, *_word_sets(spark, scratch), 0.9, candidates=cand
             )
 
         def set_confs(confs):
