@@ -1,11 +1,26 @@
 """LogDB — the user-facing facade of the engine.
 
 The ergonomic surface a log-database user expects — ingest, search,
-tail, time histograms, sessionize, stream — each method a thin
-composition of the operator kernels in ``operators/`` returning plain
-DataFrames (lazily: nothing executes until the caller acts). All
-heavy lifting stays in Catalyst-optimized plans; the facade adds no
-driver-side work.
+tail, time histograms, sessionize, stream — returning plain DataFrames
+lazily: nothing executes until the caller acts, apart from timestamp
+validation and the one stats action ``search_ranked`` folds into its
+plan. All heavy lifting stays in Catalyst-optimized plans.
+
+Four query methods validate their input and then call the same kernel
+a registered operator runs, so the operator's DuckDB oracle pins them
+too:
+
+- ``search_ranked``: ``operators.llm.ranked_top_k`` (text_search_bm25,
+  text_search_ranked);
+- ``lifecycle``: ``operators.logops.lifecycle_stages``
+  (log_user_lifecycle_stages);
+- ``catalog_stats``: ``operators.scans.catalog_stats``
+  (scan_catalog_stats);
+- ``sessionize``: ``streaming.batch_equiv.session_counts``
+  (stream_session_window).
+
+``search``, ``tail``, ``histogram`` and ``top`` have no operator twin
+and are built here.
 
     db = LogDB(spark)
     db.ingest_parquet("/data/events.parquet", "events")
@@ -18,13 +33,16 @@ driver-side work.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
-from logdb_spark.functions.ranking import bounded_global_window
+from logdb_spark.operators.llm import EmptyCorpus, ranked_top_k
+from logdb_spark.operators.logops import lifecycle_stages
+from logdb_spark.operators.scans import catalog_stats
 from logdb_spark.plans.session import configure, get_spark
 from logdb_spark.sources.load import normalize_ts
+from logdb_spark.streaming.batch_equiv import session_counts
 
 
 class LogDBError(ValueError):
@@ -33,6 +51,11 @@ class LogDBError(ValueError):
 
 
 class LogDB:
+    """A session's log tables and the queries over them. ``search_ranked``,
+    ``lifecycle``, ``catalog_stats`` and ``sessionize`` project the
+    kernels of registered operators; ``search``, ``tail``,
+    ``histogram`` and ``top`` have no operator twin."""
+
     def __init__(self, spark: SparkSession | None = None):
         self.spark = configure(spark or get_spark("logdb"))
         self._tables: dict[str, DataFrame] = {}
@@ -201,16 +224,7 @@ class LogDB:
         """Per-user session windows with the given inactivity gap."""
         df = self.table(name)
         self._check_columns(df, name, user_col, ts_col)
-        return (
-            df.groupBy(F.session_window(ts_col, gap).alias("w"), F.col(user_col))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                user_col,
-                F.col("w.start").alias("session_start"),
-                F.col("w.end").alias("session_end"),
-                "n_events",
-            )
-        )
+        return session_counts(df, gap, user_col, ts_col)
 
     def top(
         self, name: str, by: str, n: int = 10, metric: str = "count"
@@ -239,11 +253,10 @@ class LogDB:
         id_col: str | None = None,
         scorer: str = "bm25",
     ) -> DataFrame:
-        """Ranked full-text retrieval over a document table: top-k rows
-        by BM25 (default; k1=1.2, b=0.75, RSJ idf) or raw tf-idf over
-        whitespace tokens. One bounded stats action (N, avgdl, per-term
-        df) folds into the plan as literals; scoring is map-only and
-        the top-k is a per-partition heap (TakeOrderedAndProject)."""
+        """Ranked full-text retrieval over a document table: the top-k
+        rows plus an unrounded ``score``, by BM25 (default; k1=1.2,
+        b=0.75, RSJ idf) or raw tf-idf over whitespace tokens, ties
+        broken by ``id_col`` (else the text). See ``ranked_top_k``."""
         if scorer not in ("bm25", "tfidf"):
             raise LogDBError(f"unknown scorer {scorer!r} (bm25|tfidf)")
         if not terms:
@@ -252,49 +265,13 @@ class LogDB:
         self._check_columns(df, name, *(
             [text_col, id_col] if id_col else [text_col]
         ))
-        toks = F.split(text_col, " ")
-        stats = df.select(
-            F.size(toks).alias("dl"),
-            *[
-                F.array_contains(toks, t).cast("int").alias(f"df_{i}")
-                for i, t in enumerate(terms)
-            ],
-        ).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("dl").alias("sum_dl"),
-            *[F.sum(f"df_{i}").alias(f"df_{i}") for i in range(len(terms))],
-        ).first()
-        if not stats["n"]:
-            raise LogDBError(f"table {name!r} is empty")
-        n = float(stats["n"])
-        avgdl = float(stats["sum_dl"]) / stats["n"]
-        dl = F.size(toks).cast("double")
-        score = None
-        for i, t in enumerate(terms):
-            df_t = float(stats[f"df_{i}"])
-            cnt = F.size(
-                F.filter(toks, (lambda term: lambda x: x == F.lit(term))(t))
-            ).cast("double")
-            if scorer == "bm25":
-                idf = F.log(F.lit((n - df_t + 0.5) / (df_t + 0.5) + 1.0))
-                norm = cnt + F.lit(1.2) * (
-                    F.lit(0.25) + F.lit(0.75) * (dl / F.lit(avgdl))
-                )
-                term_score = idf * ((cnt * F.lit(2.2)) / norm)
-            else:
-                term_score = cnt * F.log(
-                    F.lit(n) / F.lit(max(df_t, 1.0))
-                )
-            score = term_score if score is None else score + term_score
-        out = df.withColumn("score", score).filter(F.col("score") > 0)
-        # Deterministic tiebreak: id_col when given, else the text
-        # itself — score ties otherwise resolve by partition order and
-        # the top-k boundary flaps between runs.
-        order = [
-            F.col("score").desc(),
-            F.col(id_col) if id_col else F.col(text_col),
-        ]
-        return out.orderBy(*order).limit(k)
+        try:
+            (hits,) = ranked_top_k(
+                df, [terms], scorer=scorer, k=k, text_col=text_col, id_col=id_col
+            )
+        except EmptyCorpus:
+            raise LogDBError(f"table {name!r} is empty") from None
+        return hits
 
     def lifecycle(
         self, name: str, user_col: str = "user_id", ts_col: str = "ts"
@@ -304,56 +281,19 @@ class LogDB:
         retained)."""
         df = self.table(name)
         self._check_columns(df, name, user_col, ts_col)
-        daily = df.select(
-            F.col(user_col).alias("u"), F.to_date(ts_col).alias("day")
-        ).distinct()
-        wu = Window.partitionBy("u").orderBy("day")
-        staged = daily.select(
-            "day",
-            F.when(F.lag("day").over(wu).isNull(), "new")
-            .when(F.datediff("day", F.lag("day").over(wu)) == 1, "retained")
-            .otherwise("resurrected")
-            .alias("stage"),
-        )
-        per_day = staged.groupBy("day").agg(
-            F.count(F.lit(1)).alias("active_users"),
-            F.count(F.when(F.col("stage") == "new", 1)).alias("new_users"),
-            F.count(F.when(F.col("stage") == "retained", 1)).alias(
-                "retained_users"
-            ),
-            F.count(F.when(F.col("stage") == "resurrected", 1)).alias(
-                "resurrected_users"
-            ),
-        )
-        wd = bounded_global_window(
-            "day", max_rows=31, why="calendar day grid (<=31 rows)"
-        )
-        return per_day.withColumn(
-            "churned_users",
-            F.coalesce(F.lag("active_users").over(wd), F.lit(0))
-            - F.col("retained_users"),
-        ).orderBy("day")
+        return lifecycle_stages(df, user_col, ts_col).orderBy("day")
 
     def catalog_stats(self, key_cols: dict[str, str]) -> DataFrame:
         """ANALYZE-style stats for registered tables: row count plus
         distinct/null counts of each table's probe key."""
-        frames = []
+        if not key_cols:
+            raise LogDBError("key_cols must be non-empty")
+        tables = {}
         for t, k in key_cols.items():
             df = self.table(t)
             self._check_columns(df, t, k)
-            frames.append(
-                df.agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.countDistinct(k).alias("n_distinct_key"),
-                    (F.count(F.lit(1)) - F.count(k)).alias("n_null_key"),
-                ).select(F.lit(t).alias("table_name"), "*")
-            )
-        if not frames:
-            raise LogDBError("key_cols must be non-empty")
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionAll(f)
-        return out
+            tables[t] = (df, k)
+        return catalog_stats(tables)
 
     # ----------------------------------------------------------- stream
 

@@ -2526,13 +2526,124 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Ranked retrieval: fixed query workload (name, terms). Terms come
-# from the fixture vocabulary; scoring is raw-count tf × ln(N/df).
+# from the fixture vocabulary. text_search_ranked scores it by tf·idf,
+# text_search_bm25 by BM25, so the two scorers can be compared side by
+# side.
 _SEARCH_QUERIES: list[tuple[str, list[str]]] = [
     ("hash join", ["hash", "join"]),
     ("stream window", ["stream", "window"]),
     ("slow query", ["slow", "query"]),
 ]
 _SEARCH_K = 10
+# BM25 parameters (the Lucene/standard defaults).
+_BM25_K1 = 1.2
+_BM25_B = 0.75
+
+
+class EmptyCorpus(ValueError):
+    """Ranked retrieval over a corpus with no rows: N and avgdl are
+    undefined, so there is nothing to score against."""
+
+
+def ranked_top_k(
+    docs: DataFrame,
+    queries: list[list[str]],
+    *,
+    scorer: str,
+    k: int,
+    text_col: str,
+    id_col: str | None,
+) -> list[DataFrame]:
+    """Ranked full-text retrieval over whitespace tokens of
+    ``text_col``: for each query (a list of terms) the top-``k`` rows
+    of ``docs`` with a positive ``score`` column appended, ordered by
+    score desc and then by ``id_col`` (the text itself when no id is
+    given, so score ties never resolve by partition order).
+
+    ``scorer`` is ``"bm25"`` (k1=1.2, b=0.75, Robertson-Sparck-Jones
+    idf ln((N-df+0.5)/(df+0.5)+1)) or ``"tfidf"`` (raw term count ×
+    ln(N/max(df, 1)); the guard gives a term absent from the corpus a
+    zero contribution instead of a division by df = 0).
+
+    Scale shape: ONE bounded stats action (N, total length, and df per
+    distinct term over all queries) folds into the plan as literals;
+    per-doc term counts are map-only higher-order expressions (no token
+    explode, no (doc, term) shuffle); each query's top-k plans as
+    TakeOrderedAndProject (per-partition heap + k·partitions merge, no
+    global sort). Raises EmptyCorpus when ``docs`` has no rows."""
+    toks = F.split(text_col, " ")
+    terms = sorted({t for q in queries for t in q})
+    stats = docs.select(
+        F.size(toks).alias("dl"),
+        *[
+            F.array_contains(toks, t).cast("int").alias(f"c_{i}")
+            for i, t in enumerate(terms)
+        ],
+    ).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("dl").alias("sum_dl"),
+        *[F.sum(f"c_{i}").alias(f"df_{i}") for i in range(len(terms))],
+    ).first()  # driver-scalar: N, total length, |query vocab| dfs
+    if not stats["n"]:
+        raise EmptyCorpus("cannot rank an empty corpus")
+    n = float(stats["n"])
+    avgdl = float(stats["sum_dl"]) / stats["n"]
+    doc_freq = {t: float(stats[f"df_{i}"]) for i, t in enumerate(terms)}
+    dl = F.size(toks).cast("double")
+
+    def term_score(t: str):
+        # One-parameter lambda: a second (even defaulted) parameter
+        # makes Spark pass the (element, index) form.
+        tf = F.size(F.filter(toks, lambda x: x == F.lit(t))).cast("double")
+        df_t = doc_freq[t]
+        if scorer == "bm25":
+            idf = F.log(F.lit((n - df_t + 0.5) / (df_t + 0.5) + 1.0))
+            norm = tf + F.lit(_BM25_K1) * (
+                F.lit(1.0 - _BM25_B) + F.lit(_BM25_B) * (dl / F.lit(avgdl))
+            )
+            return idf * ((tf * F.lit(_BM25_K1 + 1.0)) / norm)
+        return tf * F.log(F.lit(n) / F.lit(max(df_t, 1.0)))
+
+    tiebreak = F.col(id_col or text_col)
+    tops = []
+    for q in queries:
+        score = term_score(q[0])
+        for t in q[1:]:
+            score = score + term_score(t)
+        tops.append(
+            docs.withColumn("score", score)
+            .filter(F.col("score") > 0)
+            .orderBy(F.col("score").desc(), tiebreak)
+            .limit(k)
+        )
+    return tops
+
+
+def _ranked_workload(spark: SparkSession, sf_dir: str, scorer: str) -> DataFrame:
+    """_SEARCH_QUERIES through ranked_top_k over the documents fixture,
+    formatted as both ranked oracles pin it: (query, rank, doc_id,
+    ROUND-6 score). The rank window runs over <= k rows per query."""
+    tops = ranked_top_k(
+        load_table(spark, sf_dir, "documents"),
+        [qterms for _, qterms in _SEARCH_QUERIES],
+        scorer=scorer,
+        k=_SEARCH_K,
+        text_col="text",
+        id_col="doc_id",
+    )
+    hits = None
+    for (qname, _), top in zip(_SEARCH_QUERIES, tops):
+        part = top.select(
+            F.lit(qname).alias("query"), "doc_id", F.col("score").alias("s")
+        )
+        hits = part if hits is None else hits.unionAll(part)
+    w = Window.partitionBy("query").orderBy(F.col("s").desc(), "doc_id")
+    return hits.select(
+        "query",
+        F.row_number().over(w).alias("rank"),
+        "doc_id",
+        ratio(F.col("s")).alias("score"),
+    )
 
 
 def _search_oracle() -> str:
@@ -2580,62 +2691,14 @@ def text_search_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents by tf·idf (raw term count × ln(N/df)), ties broken by
     doc_id.
 
-    Scale shape: per-doc term counts are MAP-ONLY higher-order
-    expressions (size(filter(toks, t = term)) — no token explode, no
-    (doc,term) shuffle); N and the per-term document frequencies are
-    ONE bounded agg action (|query vocab| scalars — the "broadcast
-    query-terms join" degenerated to plan-time literals, cheaper
-    still); each query's top-k plans as TakeOrderedAndProject (per-
-    partition heap + merge of k·partitions rows — NO global sort: the
-    plan test pins this), and the final rank is a window over ≤ k
-    rows per query. At 100 TB: one corpus scan per ranked batch, k
-    rows out per query. idf stays in-plan (F.log on literal N/df) so
-    both engines fold the same double expression; the score is
-    ROUND-6 at the boundary only."""
-    d = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    all_terms = sorted({t for _, ts in _SEARCH_QUERIES for t in ts})
-    stats = d.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(F.array_contains(toks, t).cast("int")).alias(f"df_{t}")
-            for t in all_terms
-        ],
-    ).first()  # driver-scalar: N + |query vocab| document frequencies
-    n = stats["n"]
-    parts = []
-    for qname, qterms in _SEARCH_QUERIES:
-        score = None
-        for t in qterms:
-            # closure factory, NOT a default arg: a second lambda param
-            # (even defaulted) makes Spark pass the (element, index)
-            # form and the index lands in the default slot.
-            def _eq(term):
-                return lambda x: x == F.lit(term)
-
-            cnt = F.size(F.filter(toks, _eq(t))).cast("double")
-            term = cnt * F.log(
-                F.lit(float(n)) / F.lit(float(stats[f"df_{t}"]))
-            )
-            score = term if score is None else score + term
-        parts.append(
-            d.select(
-                F.lit(qname).alias("query"), "doc_id", score.alias("s")
-            )
-            .filter(F.col("s") > 0)
-            .orderBy(F.col("s").desc(), "doc_id")
-            .limit(_SEARCH_K)
-        )
-    hits = parts[0]
-    for p in parts[1:]:
-        hits = hits.unionAll(p)
-    w = Window.partitionBy("query").orderBy(F.col("s").desc(), "doc_id")
-    return hits.select(
-        "query",
-        F.row_number().over(w).alias("rank"),
-        "doc_id",
-        ratio(F.col("s")).alias("score"),
-    )
+    Scale shape is ranked_top_k's: one bounded stats action, map-only
+    term counts, a TakeOrderedAndProject per query (the plan test pins
+    this), and the final rank is a window over ≤ k rows per query. At
+    100 TB: one corpus scan per ranked batch, k rows out per query.
+    idf stays in-plan (F.log on literal N/df) so both engines fold the
+    same double expression; the score is ROUND-6 at the boundary
+    only."""
+    return _ranked_workload(spark, sf_dir, "tfidf")
 
 
 @register(
@@ -5383,13 +5446,6 @@ def embed_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# BM25 parameters (the Lucene/standard defaults) and the shared ranked
-# workload — reuses _SEARCH_QUERIES so tf-idf and BM25 rank the same
-# queries and a user can compare the two scorers side by side.
-_BM25_K1 = 1.2
-_BM25_B = 0.75
-
-
 def _bm25_oracle() -> str:
     all_terms = sorted({t for _, ts in _SEARCH_QUERIES for t in ts})
     dfs = ", ".join(
@@ -5446,64 +5502,15 @@ def text_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     a long one), with the Robertson-Sparck-Jones idf
     ln((N-df+0.5)/(df+0.5)+1).
 
-    Scale shape mirrors text_search_ranked exactly: per-doc term
-    counts are map-only higher-order expressions (no token explode);
-    N, avgdl and the per-term dfs are ONE bounded agg action folded
-    into the plan as literals; each query's top-k plans as
-    TakeOrderedAndProject (per-partition heap, k·partitions merge —
-    no global sort); the rank window runs over ≤ k rows per query.
+    Both ranked operators and LogDB.search_ranked run the one kernel,
+    ranked_top_k; this operator only picks its BM25 scorer. N, avgdl
+    and the per-term dfs come from its single stats action. Each query
+    ends in a TakeOrderedAndProject, so there is no global sort.
     Determinism: idf/dl/avgdl arithmetic is written with the SAME
-    parenthesization in both engines over bit-identical inputs
-    (integer-derived doubles), and the score rounds at the boundary
-    only."""
-    d = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    all_terms = sorted({t for _, ts in _SEARCH_QUERIES for t in ts})
-    stats = d.select(F.size(toks).alias("dl"), *[
-        F.array_contains(toks, t).cast("int").alias(f"c_{t}")
-        for t in all_terms
-    ]).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("dl").alias("sum_dl"),
-        *[F.sum(f"c_{t}").alias(f"df_{t}") for t in all_terms],
-    ).first()  # driver-scalar: N, total length, |query vocab| dfs
-    n = float(stats["n"])
-    avgdl = float(stats["sum_dl"]) / stats["n"]
-    dl = F.size(toks).cast("double")
-    parts = []
-    for qname, qterms in _SEARCH_QUERIES:
-        score = None
-        for t in qterms:
-            df_t = float(stats[f"df_{t}"])
-            idf = F.log(F.lit((n - df_t + 0.5) / (df_t + 0.5) + 1.0))
-
-            def _eq(term):
-                return lambda x: x == F.lit(term)
-
-            tf = F.size(F.filter(toks, _eq(t))).cast("double")
-            norm = tf + F.lit(_BM25_K1) * (
-                F.lit(1.0 - _BM25_B) + F.lit(_BM25_B) * (dl / F.lit(avgdl))
-            )
-            term_score = idf * ((tf * F.lit(_BM25_K1 + 1.0)) / norm)
-            score = term_score if score is None else score + term_score
-        parts.append(
-            d.select(
-                F.lit(qname).alias("query"), "doc_id", score.alias("s")
-            )
-            .filter(F.col("s") > 0)
-            .orderBy(F.col("s").desc(), "doc_id")
-            .limit(_SEARCH_K)
-        )
-    hits = parts[0]
-    for p in parts[1:]:
-        hits = hits.unionAll(p)
-    w = Window.partitionBy("query").orderBy(F.col("s").desc(), "doc_id")
-    return hits.select(
-        "query",
-        F.row_number().over(w).alias("rank"),
-        "doc_id",
-        ratio(F.col("s")).alias("score"),
-    )
+    parenthesization in the kernel and the oracle over bit-identical
+    inputs (integer-derived doubles), and the score rounds at the
+    boundary only."""
+    return _ranked_workload(spark, sf_dir, "bm25")
 
 
 @register(

@@ -3681,6 +3681,48 @@ def log_dp_noisy_sum_userlevel(
     )
 
 
+def lifecycle_stages(events: DataFrame, user_col: str, ts_col: str) -> DataFrame:
+    """Daily growth accounting over ``events``: one row per active day
+    with ``day`` (a date), ``active_users`` split into ``new_users``
+    (first day ever), ``retained_users`` (also active the day before)
+    and ``resurrected_users`` (back after a gap), plus
+    ``churned_users`` = the previous active day's actives minus
+    today's retained. All counts are bigint.
+
+    Scale shape: one distinct (user, day) agg, one user-partitioned
+    lag window (per-user rows bounded by the calendar), one day
+    groupBy, and a final lag over the ~30-row calendar domain (the
+    bounded-domain global window this repo's no-partition-window rule
+    explicitly allows)."""
+    daily = events.select(
+        F.col(user_col).alias("u"), F.to_date(ts_col).alias("day")
+    ).distinct()
+    wu = Window.partitionBy("u").orderBy("day")
+    staged = daily.select(
+        "day",
+        F.when(F.lag("day").over(wu).isNull(), "new")
+        .when(F.datediff("day", F.lag("day").over(wu)) == 1, "retained")
+        .otherwise("resurrected")
+        .alias("stage"),
+    )
+    per_day = staged.groupBy("day").agg(
+        F.count(F.lit(1)).alias("active_users"),
+        F.count(F.when(F.col("stage") == "new", 1)).alias("new_users"),
+        F.count(F.when(F.col("stage") == "retained", 1)).alias(
+            "retained_users"
+        ),
+        F.count(F.when(F.col("stage") == "resurrected", 1)).alias(
+            "resurrected_users"
+        ),
+    )
+    wd = bounded_global_window("day", max_rows=31, why="calendar day grid (<=31 rows)")
+    return per_day.withColumn(
+        "churned_users",
+        F.coalesce(F.lag("active_users").over(wd), F.lit(0))
+        - F.col("retained_users"),
+    )
+
+
 @register(
     "log_user_lifecycle_stages",
     oracle="""
@@ -3729,45 +3771,8 @@ def log_user_lifecycle_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition actives exactly: new + retained + resurrected =
     active_users, an identity the oracle hash-pins.
 
-    Scale shape: one distinct (user, day) agg, one user-partitioned
-    lag window (per-user rows bounded by the calendar), one day
-    groupBy, and a final lag over the ~30-row calendar domain (the
-    bounded-domain global window this repo's no-partition-window rule
-    explicitly allows). Everything integer-exact."""
-    daily = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id", F.to_date("ts").alias("day"))
-        .distinct()
-    )
-    wu = Window.partitionBy("user_id").orderBy("day")
-    staged = daily.select(
-        "day",
-        F.when(F.lag("day").over(wu).isNull(), "new")
-        .when(F.datediff("day", F.lag("day").over(wu)) == 1, "retained")
-        .otherwise("resurrected")
-        .alias("stage"),
-    )
-    per_day = staged.groupBy("day").agg(
-        F.count(F.lit(1)).alias("active_users"),
-        F.count(F.when(F.col("stage") == "new", 1)).alias("new_users"),
-        F.count(F.when(F.col("stage") == "retained", 1)).alias(
-            "retained_users"
-        ),
-        F.count(F.when(F.col("stage") == "resurrected", 1)).alias(
-            "resurrected_users"
-        ),
-    )
-    wd = bounded_global_window("day", max_rows=31, why="calendar day grid (<=31 rows)")
-    return per_day.select(
-        F.date_format("day", "yyyy-MM-dd").alias("day"),
-        F.col("active_users").cast("bigint").alias("active_users"),
-        F.col("new_users").cast("bigint").alias("new_users"),
-        F.col("retained_users").cast("bigint").alias("retained_users"),
-        F.col("resurrected_users").cast("bigint").alias("resurrected_users"),
-        (
-            F.coalesce(F.lag("active_users").over(wd), F.lit(0))
-            - F.col("retained_users")
-        )
-        .cast("bigint")
-        .alias("churned_users"),
-    )
+    Scale shape is lifecycle_stages'. Everything integer-exact; only
+    the day is formatted here."""
+    return lifecycle_stages(
+        load_table(spark, sf_dir, "events"), "user_id", "ts"
+    ).withColumn("day", F.date_format("day", "yyyy-MM-dd"))

@@ -1471,6 +1471,24 @@ _CATALOG_KEYS = {
 }
 
 
+def catalog_stats(tables: dict[str, tuple[DataFrame, str]]) -> DataFrame:
+    """One row per ``table_name -> (frame, key column)``: bigint
+    ``n_rows``, ``n_distinct_key`` and ``n_null_key``, in the dict's
+    order. Each table is one global agg over a scan that needs only
+    its key column; the 1-row results union."""
+    return functools.reduce(
+        DataFrame.unionAll,
+        [
+            df.agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.countDistinct(k).alias("n_distinct_key"),
+                (F.count(F.lit(1)) - F.count(k)).alias("n_null_key"),
+            ).select(F.lit(t).alias("table_name"), "*")
+            for t, (df, k) in tables.items()
+        ],
+    )
+
+
 def _catalog_oracle() -> str:
     parts = [
         f"SELECT '{t}' AS table_name,"
@@ -1496,22 +1514,9 @@ def scan_catalog_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 10-row answer; nothing shuffles except the per-table final agg
     merge. At 100 TB this is embarrassingly parallel across tables and
     each scan prunes to its key column only."""
-    frames = []
-    for t, k in _CATALOG_KEYS.items():
-        df = load_table(spark, sf_dir, t)
-        frames.append(
-            df.agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                F.countDistinct(k).cast("bigint").alias("n_distinct_key"),
-                (F.count(F.lit(1)) - F.count(k))
-                .cast("bigint")
-                .alias("n_null_key"),
-            ).select(F.lit(t).alias("table_name"), "*")
-        )
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionAll(f)
-    return out
+    return catalog_stats(
+        {t: (load_table(spark, sf_dir, t), k) for t, k in _CATALOG_KEYS.items()}
+    )
 
 
 @register(

@@ -133,10 +133,13 @@ _R14_NEEDS_ROW_FIRST = (
 
 def _enumeration_order(ops: dict[str, Operator]) -> list[str]:
     priority = {n: i for i, n in enumerate(_R14_NEEDS_ROW_FIRST)}
-    # Stable sort: the explicit stale-first priority head, then
-    # registration (module build-phase) order for everything else.
+    phase = {m: i for i, m in enumerate(_OPERATOR_MODULES)}
+    # Stable sort: the explicit stale-first priority head, then module
+    # build-phase order, registration order within a module. Keying on
+    # the module keeps the order the same when a module is imported
+    # before the registry loads (LogDB imports the kernels it shares).
     return sorted(ops, key=lambda n: (0, priority[n]) if n in priority
-                  else (1, -1))
+                  else (1, phase[ops[n].fn.__module__]))
 
 
 # Persisted intermediates tracked for deferred release. An operator

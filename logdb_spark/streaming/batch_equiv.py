@@ -79,21 +79,34 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def session_windows(events: DataFrame) -> DataFrame:
-    """Shared by batch + streaming harness: native 30-min-gap session
-    windows per user over second-truncated time (so batch, streaming,
-    and the SQL oracle see identical boundary arithmetic)."""
+def session_counts(
+    events: DataFrame, gap: str, user_col: str, ts_col: str
+) -> DataFrame:
+    """Native session windows per user with inactivity ``gap``:
+    ``user_col``, ``session_start`` and ``session_end`` (timestamps)
+    and ``n_events``. Works on bounded and unbounded inputs."""
     return (
-        events.withColumn("tss", F.date_trunc("second", "ts"))
-        .groupBy(F.session_window("tss", "30 minutes").alias("w"), "user_id")
+        events.groupBy(F.session_window(ts_col, gap).alias("w"), F.col(user_col))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
-            "user_id",
-            ts_str("w.start").alias("session_start"),
-            ts_str("w.end").alias("session_end"),
+            user_col,
+            F.col("w.start").alias("session_start"),
+            F.col("w.end").alias("session_end"),
             "n_events",
         )
     )
+
+
+def session_windows(events: DataFrame) -> DataFrame:
+    """Shared by batch + streaming harness: 30-min-gap session_counts
+    per user over second-truncated time (so batch, streaming, and the
+    SQL oracle see identical boundary arithmetic), bounds as strings."""
+    return session_counts(
+        events.withColumn("tss", F.date_trunc("second", "ts")),
+        "30 minutes",
+        "user_id",
+        "tss",
+    ).withColumns({c: ts_str(c) for c in ("session_start", "session_end")})
 
 
 @register(
@@ -792,7 +805,9 @@ def sink_python_stream_datasource(spark: SparkSession, sf_dir: str) -> DataFrame
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    if not q.awaitTermination(180):
+        q.stop()
+        raise TimeoutError("jsonshard sink stream did not finish")
     n_batches = len(_glob.glob(_os.path.join(out, "_MANIFEST-*.json")))
     back = spark.read.schema(
         "event_id bigint, user_id bigint, event_type string"

@@ -7,6 +7,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from logdb_spark.api import LogDB
+from logdb_spark.functions.numeric import ratio
 from tests.conftest import SF_SMALL
 
 
@@ -141,21 +142,58 @@ def db_docs(spark):
 
 
 def test_search_ranked_bm25_matches_operator(db_docs, spark):
-    """The facade's BM25 must rank exactly like text_search_bm25's
-    kernel: same top-10 doc ids for the same terms."""
+    """The facade ranks exactly like text_search_bm25 and
+    text_search_ranked for both scorers and every workload query: same
+    top-10 doc ids in the same order, and the same scores once rounded
+    the way the operators round them."""
+    from logdb_spark.operators.llm import _SEARCH_K, _SEARCH_QUERIES
     from logdb_spark.registry import all_operators
 
-    hits = db_docs.search_ranked(
-        "docs", ["hash", "join"], k=10, id_col="doc_id"
-    ).select("doc_id").collect()
-    op = all_operators()["text_search_bm25"].fn(spark, SF_SMALL)
-    want = [
-        r["doc_id"]
-        for r in op.filter(F.col("query") == "hash join")
-        .orderBy("rank")
-        .collect()
-    ]
-    assert [r["doc_id"] for r in hits] == want
+    ops = all_operators()
+    for scorer, op_name in (("bm25", "text_search_bm25"), ("tfidf", "text_search_ranked")):
+        op = ops[op_name].fn(spark, SF_SMALL).collect()
+        for qname, qterms in _SEARCH_QUERIES:
+            hits = db_docs.search_ranked(
+                "docs", qterms, k=_SEARCH_K, id_col="doc_id", scorer=scorer
+            ).select("doc_id", ratio("score").alias("score"))
+            want = sorted(
+                (r["rank"], r["doc_id"], r["score"])
+                for r in op
+                if r["query"] == qname
+            )
+            assert want, (scorer, qname)
+            assert [(r["doc_id"], r["score"]) for r in hits.collect()] == [
+                (doc_id, score) for _, doc_id, score in want
+            ], (scorer, qname)
+
+
+def test_tfidf_absent_term_contributes_nothing(db_docs, spark):
+    """A tf·idf query term that no document contains adds zero to every
+    score (idf uses max(df, 1), never ln(N/0)): the facade and a
+    multi-query kernel call return the same hits with and without it,
+    and raise nothing."""
+    from logdb_spark.operators.llm import ranked_top_k
+
+    terms = ["hash", "join"]
+    absent = terms + ["zzz-not-in-corpus"]
+
+    def rows(df):
+        return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+    base = rows(db_docs.search_ranked("docs", terms, id_col="doc_id", scorer="tfidf"))
+    assert base
+    assert rows(
+        db_docs.search_ranked("docs", absent, id_col="doc_id", scorer="tfidf")
+    ) == base
+    with_absent, without = ranked_top_k(
+        db_docs.table("docs"),
+        [absent, terms],
+        scorer="tfidf",
+        k=10,
+        text_col="text",
+        id_col="doc_id",
+    )
+    assert rows(with_absent) == rows(without) == base
 
 
 def test_search_ranked_validates(db_docs):
@@ -181,3 +219,63 @@ def test_catalog_stats_shape(db_docs):
     by = {r["table_name"]: r for r in rows}
     assert by["docs"]["n_rows"] == by["docs"]["n_distinct_key"]
     assert by["ev2"]["n_null_key"] == 0
+
+
+def test_lifecycle_matches_operator(db_docs, spark):
+    """lifecycle over the events fixture, with its day formatted as the
+    operator formats it, is log_user_lifecycle_stages row for row; the
+    facade keeps day a date, ordered."""
+    from pyspark.sql.types import DateType
+
+    from logdb_spark.registry import all_operators
+
+    got = db_docs.lifecycle("ev2")
+    assert isinstance(got.schema["day"].dataType, DateType)
+    rows = got.collect()
+    assert [r["day"] for r in rows] == sorted(r["day"] for r in rows)
+    op = all_operators()["log_user_lifecycle_stages"].fn(spark, SF_SMALL)
+    formatted = got.withColumn("day", F.date_format("day", "yyyy-MM-dd"))
+    assert formatted.schema == op.schema
+    assert formatted.collect() == sorted(op.collect(), key=lambda r: r["day"])
+
+
+def test_sessionize_matches_operator(db_docs, spark):
+    """sessionize over second-truncated ts, bounds formatted as strings,
+    is stream_session_window row for row; the facade keeps its bounds
+    timestamps."""
+    from pyspark.sql.types import TimestampType
+
+    from logdb_spark.functions.temporal import ts_str
+    from logdb_spark.registry import all_operators
+
+    db_docs.register(
+        "ev2_s", db_docs.table("ev2").withColumn("ts", F.date_trunc("second", "ts"))
+    )
+    got = db_docs.sessionize("ev2_s", gap="30 minutes")
+    assert isinstance(got.schema["session_start"].dataType, TimestampType)
+    assert isinstance(got.schema["session_end"].dataType, TimestampType)
+    formatted = got.select(
+        "user_id",
+        ts_str("session_start").alias("session_start"),
+        ts_str("session_end").alias("session_end"),
+        "n_events",
+    )
+    op = all_operators()["stream_session_window"].fn(spark, SF_SMALL)
+    assert formatted.schema == op.schema
+    assert sorted(formatted.collect()) == sorted(op.collect())
+
+
+def test_catalog_stats_matches_operator(db_docs, spark):
+    """catalog_stats over the operator's ten tables and keys is
+    scan_catalog_stats row for row, in the same order."""
+    from logdb_spark.operators.scans import _CATALOG_KEYS
+    from logdb_spark.registry import all_operators
+    from logdb_spark.sources.load import load_table
+
+    db = LogDB(spark)
+    for t in _CATALOG_KEYS:
+        db.register(t, load_table(spark, SF_SMALL, t))
+    got = db.catalog_stats(_CATALOG_KEYS)
+    op = all_operators()["scan_catalog_stats"].fn(spark, SF_SMALL)
+    assert got.schema == op.schema
+    assert got.collect() == op.collect()

@@ -103,7 +103,7 @@ def test_survey_section2_matches_registry():
     )
 
 
-def test_all_registered_schemas_are_scalar_only(spark):
+def test_all_registered_schemas_are_scalar_only(built_ops):
     """The driver's canonicalizer crashes on array/map cells — and it
     canonicalizes EVERY output, rows-only included (r1
     agg_collect_sorted, r2 fn_array_suite + fn_map_from_json, r3
@@ -111,18 +111,21 @@ def test_all_registered_schemas_are_scalar_only(spark):
     slipped through precisely because this test used to exempt
     oracle-less ops). So: every registered operator, no exemptions,
     must emit only scalar columns; join arrays to strings before
-    returning.
+    returning. An operator whose build raises fails this test too.
 
-    Cost note: building each DataFrame to read .schema is lazy for
-    most ops, but NOT free for all — a few ops run eager work at
-    plan-build time (dedup_cluster_assign's label-propagation loop,
-    the sink_* ops' temp-dir writes). That cost is accepted: this is
-    the one gate that has caught this bug class."""
+    Cost note: the schemas come from the session's one construction
+    sweep (``built_ops``), which the cartesian-plan audit shares. A
+    build is lazy for most ops, but NOT free for all — a few ops run
+    eager work at plan-build time (dedup_cluster_assign's
+    label-propagation loop, the sink_* ops' temp-dir writes)."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
     bad = []
-    for name, op in OPS.items():
-        for f in op.fn(spark, SF_SMALL).schema.fields:
+    for name, (schema, _plan) in built_ops.items():
+        if isinstance(schema, Exception):
+            bad.append(f"{name}: build raised {schema!r}")
+            continue
+        for f in schema.fields:
             if isinstance(f.dataType, (ArrayType, MapType, StructType)):
                 bad.append(f"{name}.{f.name}: {f.dataType.simpleString()}")
     assert not bad, f"non-scalar columns in registered ops: {bad}"

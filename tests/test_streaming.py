@@ -636,7 +636,9 @@ def test_stream_sink_manifests_cover_all_shards_exactly_once(spark):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    if not q.awaitTermination(180):
+        q.stop()
+        raise TimeoutError("jsonshard sink stream did not finish")
 
     manifests = sorted(glob.glob(os.path.join(out, "_MANIFEST-*.json")))
     assert len(manifests) == 4, "expected one manifest per staged file"

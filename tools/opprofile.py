@@ -28,31 +28,18 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     evdir = tempfile.mkdtemp(prefix="logdb_evlog_")
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    from pyspark.sql import SparkSession
+    # The event log is a launch-time conf: pass it to get_spark's
+    # session through the submit args instead of a second builder.
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join([
+        "--conf spark.eventLog.enabled=true",
+        "--conf spark.eventLog.compress=false",
+        "--conf spark.eventLog.rolling.enabled=false",
+        f"--conf spark.eventLog.dir={evdir}",
+        "pyspark-shell",
+    ])
+    from logdb_spark.plans.session import get_spark
 
-    from logdb_spark.plans.session import (
-        RUNTIME_CONFS,
-        STATIC_CONFS,
-        default_shuffle_partitions,
-    )
-
-    cpus = os.environ["SPARK_GRAFT_CPUS"]
-    builder = (
-        SparkSession.builder.appName("opprofile")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(default_shuffle_partitions()))
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .config("spark.eventLog.dir", evdir)
-    )
-    for k, v in {**STATIC_CONFS, **RUNTIME_CONFS}.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = get_spark("opprofile")
 
     from logdb_spark.registry import all_operators
 
