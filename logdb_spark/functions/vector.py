@@ -1,11 +1,17 @@
 """Vector math over ArrayType(FloatType) columns — JVM-side, no UDF.
 
 Embeddings are unit-norm (FIXTURES.md), so cosine similarity equals the
-dot product. Both are expressed with higher-order functions
-(``zip_with`` + ``aggregate``), which run inside codegen on the JVM —
-no Python serialization in the hot path. At 100 TB this is the
-brute-force kernel; the scale path (LSH bucketing / IVF in
-operators/llm.py) reduces the candidate set before this kernel runs.
+dot product. All three are higher-order functions (``zip_with`` /
+``aggregate``) that run inside codegen on the JVM — no Python
+serialization in the hot path — and each folds ``acc + x*y`` left to
+right, the order DuckDB's ``list_dot_product`` uses too.
+
+``dot`` is the score of the two embedding kernels in operators/llm.py:
+``_probe_topk`` (probe batch against a corpus, top-k per probe, with an
+optional LSH or IVF candidate predicate) and ``_vec_pairs`` (threshold
+pairs, all-pairs or over candidates). ``l2_norm`` and ``cosine_sim``
+serve vectors that are not unit-norm: centroids, truncated prefixes,
+and the norm monitor itself.
 """
 
 from __future__ import annotations

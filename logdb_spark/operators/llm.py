@@ -16,6 +16,7 @@ Scale design (the whole point of this section):
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Iterator  # resolvable if tooling evaluates hints
 
 import pandas as pd  # annotations of Arrow-batched UDFs resolve via module globals
@@ -25,7 +26,7 @@ from pyspark.sql import functions as F
 
 from logdb_spark.functions.ranking import bounded_global_window
 from logdb_spark.functions.numeric import ratio
-from logdb_spark.functions.vector import dot, l2_norm
+from logdb_spark.functions.vector import cosine_sim, dot, l2_norm
 from logdb_spark.registry import register, track_persist
 from logdb_spark.sources.load import load_table
 
@@ -1156,9 +1157,11 @@ def _minhash_bands(
 ) -> DataFrame:
     """(doc_id, n, band, bucket) LSH band rows over the md5-affine
     signature family — the shared front half of _minhash_candidates,
-    dedup_incremental_minhash, and (batch-at-a-time, via the df-level
-    halves above) stream_dedup_minhash. The signature relation is
-    persisted: banding and both sides of the exact verify read it."""
+    dedup_incremental_minhash, text_fuzzy_decontaminate and
+    (batch-at-a-time, via the df-level halves above)
+    stream_dedup_minhash; _band_join is the shared back half. The
+    signature relation is persisted: banding and both sides of the
+    exact verify read it."""
     # NOT eager (r13 A/B): the band self-join's sides race on this
     # cache cold and duplicate the aggregation, but the aggregation is
     # a WIDE 64-task stage — the duplicates run concurrently on
@@ -1204,25 +1207,38 @@ def _minhash_candidates(
     ~par with the old murmur3 path. Semantics are identical to
     inlining the hash per row; the oracle keeps the inline form."""
     bands = _minhash_bands(spark, sf_dir, n_perm=n_perm, n_bands=n_bands)
-    x, y = bands.alias("x"), bands.alias("y")
-    # Size-ratio bound fused into the bucket join: pairs that cannot
-    # reach the Jaccard threshold never enter the distinct shuffle.
     return (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.doc_id") < F.col("y.doc_id"))
-            & (
-                F.least("x.n", "y.n")
-                >= F.greatest("x.n", "y.n") * F.lit(threshold)
-            ),
-        )
+        _band_join(bands, bands, threshold, operator.lt)
         .select(
-            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
+            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
         )
         .distinct()
     )
+
+
+def _band_join(
+    left: DataFrame, right: DataFrame, threshold: float, pair=None
+) -> DataFrame:
+    """The MinHash band join — the one place that states the admission
+    rule: same band, same bucket, and sizes within the Jaccard bound
+    ``least(n) >= greatest(n) * threshold`` (a pair whose distinct-token
+    counts differ by more cannot reach the threshold, so it never
+    enters the caller's distinct shuffle or verify). ``left`` and
+    ``right`` are band relations (doc_id, n, band, bucket, ...), aliased
+    "l" and "r" in the result; ``pair`` is the caller's orientation
+    predicate over (l.doc_id, r.doc_id) — ``operator.lt`` for a self
+    join, ``operator.ne`` when one side is a subset of the other, None
+    across disjoint sides. Which side is broadcast, the projection and
+    any distinct stay with the caller."""
+    cond = (F.col("l.band") == F.col("r.band")) & (
+        F.col("l.bucket") == F.col("r.bucket")
+    )
+    if pair is not None:
+        cond = cond & pair(F.col("l.doc_id"), F.col("r.doc_id"))
+    cond = cond & (
+        F.least("l.n", "r.n") >= F.greatest("l.n", "r.n") * F.lit(threshold)
+    )
+    return left.alias("l").join(right.alias("r"), cond)
 
 
 @register(
@@ -1253,20 +1269,10 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_bands = bands.filter(F.col("doc_id") % 10 == 0)
     threshold = 0.9
     cand = (
-        bands.alias("y")
-        .join(
-            F.broadcast(new_bands.alias("x")),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.doc_id") != F.col("y.doc_id"))
-            & (
-                F.least("x.n", "y.n")
-                >= F.greatest("x.n", "y.n") * F.lit(threshold)
-            ),
-        )
+        _band_join(bands, F.broadcast(new_bands), threshold, operator.ne)
         .select(
-            F.least("x.doc_id", "y.doc_id").alias("doc_a"),
-            F.greatest("x.doc_id", "y.doc_id").alias("doc_b"),
+            F.least("r.doc_id", "l.doc_id").alias("doc_a"),
+            F.greatest("r.doc_id", "l.doc_id").alias("doc_b"),
         )
         .distinct()
     )
@@ -1312,19 +1318,10 @@ def text_fuzzy_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = bands.filter(F.col("source") == "src0")
     tr = bands.filter(F.col("source") != "src0")
     cand = (
-        tr.alias("t")
-        .join(
-            F.broadcast(ev.alias("e")),
-            (F.col("e.band") == F.col("t.band"))
-            & (F.col("e.bucket") == F.col("t.bucket"))
-            & (
-                F.least("e.n", "t.n")
-                >= F.greatest("e.n", "t.n") * F.lit(threshold)
-            ),
-        )
+        _band_join(tr, F.broadcast(ev), threshold)
         .select(
-            F.col("e.doc_id").alias("doc_a"),  # eval side
-            F.col("t.doc_id").alias("doc_b"),  # training side
+            F.col("r.doc_id").alias("doc_a"),  # eval side
+            F.col("l.doc_id").alias("doc_b"),  # training side
         )
         .distinct()
     )
@@ -1515,22 +1512,46 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs (cosine ≥ 0.4; fixtures are unit-norm
     so cosine ≡ dot). Brute-force O(n²) — the oracle/ground-truth path;
-    sim_ann_lsh is the scale path over the same kernel."""
+    dedup_embedding_cosine_lsh is the scale path over the same
+    _vec_pairs scorer, fed bucket candidates."""
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
     )
-    # one-file input → repartition so the O(n²) scoring parallelizes
-    a = e.repartition(spark.sparkContext.defaultParallelism).alias("a")
-    b = F.broadcast(e).alias("b")
-    d = dot(F.col("a.emb"), F.col("b.emb"))
-    return (
-        a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
+    return _vec_pairs(spark, e, 0.4)
+
+
+def _vec_pairs(
+    spark: SparkSession, e: DataFrame, threshold: float, candidates=None
+) -> DataFrame:
+    """(vec_a, vec_b, cosine) embedding pairs whose UNROUNDED dot is
+    ≥ threshold, cosine = ratio(dot) — the one pair scorer behind
+    dedup_embedding_cosine and dedup_embedding_cosine_lsh (inputs are
+    unit-norm, so cosine ≡ dot). ``e`` carries (vec_id, emb).
+
+    No ``candidates``: every vec_a < vec_b pair, as a broadcast nested
+    loop over a probe side repartitioned to the core count (the
+    fixture is one file, so the O(n²) scoring would otherwise run as
+    one task). With ``candidates`` (vec_a, vec_b): only those pairs,
+    each side's embedding joined back by plain shuffle joins on vec_a
+    and vec_b, so the corpus is never broadcast and each pair is
+    scored once."""
+    if candidates is None:
+        a = e.repartition(spark.sparkContext.defaultParallelism).alias("a")
+        pairs = a.join(
+            F.broadcast(e).alias("b"), F.col("a.vec_id") < F.col("b.vec_id")
+        ).select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
-            d.alias("d"),
+            F.col("a.emb").alias("emb_a"),
+            F.col("b.emb").alias("emb_b"),
         )
-        .filter(F.col("d") >= 0.4)
+    else:
+        ea = e.select(F.col("vec_id").alias("vec_a"), F.col("emb").alias("emb_a"))
+        eb = e.select(F.col("vec_id").alias("vec_b"), F.col("emb").alias("emb_b"))
+        pairs = candidates.join(ea, "vec_a").join(eb, "vec_b")
+    return (
+        pairs.select("vec_a", "vec_b", dot(F.col("emb_a"), F.col("emb_b")).alias("d"))
+        .filter(F.col("d") >= threshold)
         .select("vec_a", "vec_b", ratio(F.col("d")).alias("cosine"))
     )
 
@@ -1837,19 +1858,55 @@ def dedup_embedding_cosine_lsh(
         # 16-byte pairs round-robin is noise next to the rescore.
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    ea = e.select(F.col("vec_id").alias("vec_a"), F.col("emb").alias("emb_a"))
-    eb = e.select(F.col("vec_id").alias("vec_b"), F.col("emb").alias("emb_b"))
-    d = dot(F.col("emb_a"), F.col("emb_b"))
-    return (
-        cand.join(ea, "vec_a")
-        .join(eb, "vec_b")
-        .select("vec_a", "vec_b", d.alias("d"))
-        .filter(F.col("d") >= 0.4)
-        .select("vec_a", "vec_b", ratio(F.col("d")).alias("cosine"))
-    )
+    return _vec_pairs(spark, e, 0.4, candidates=cand)
 
 
 # ------------------------------------------------------- similarity search
+
+
+def _probe_topk(
+    corpus: DataFrame, probe_ids: list[int], k: int, candidate=None
+) -> DataFrame:
+    """The embedding probe sweep behind every exact-rescore top-k: the
+    probe rows (``vec_id`` in ``probe_ids``) broadcast against one
+    corpus scan, each (corpus, probe) pair with distinct ids scored
+    ``cosine = ratio(dot(emb, probe emb))`` on the JVM, and the top
+    ``k`` per probe kept by (rounded cosine desc, vec_id) — ranking on
+    the 6-dp score makes the cut stable under last-ulp float
+    divergence across engines.
+
+    ``corpus`` carries (vec_id, emb) plus any columns the caller keeps
+    or tests; ``candidate`` is an optional predicate over the corpus
+    side (alias "c") and the probe side (alias "p"), e.g. an LSH
+    signature match or an IVF cell test, evaluated inside the join.
+    The result is (probe_id, every corpus column, cosine); columns the
+    caller does not select are pruned before the top-k. The top-k form
+    follows the probe list: one probe is an orderBy + limit, which
+    plans as TakeOrderedAndProject (per-partition heaps, no global
+    sort); a batch is a row_number window partitioned by probe, one
+    corpus pass however many probes."""
+    probe = F.broadcast(corpus.filter(F.col("vec_id").isin(probe_ids)))
+    cond = F.col("c.vec_id") != F.col("p.vec_id")
+    if candidate is not None:
+        cond = cond & candidate
+    scored = (
+        corpus.alias("c")
+        .join(probe.alias("p"), cond)
+        .select(
+            F.col("p.vec_id").alias("probe_id"),
+            "c.*",
+            ratio(dot(F.col("c.emb"), F.col("p.emb"))).alias("cosine"),
+        )
+    )
+    order = (F.col("cosine").desc(), "vec_id")
+    if len(probe_ids) == 1:
+        return scored.orderBy(*order).limit(k)
+    w = Window.partitionBy("probe_id").orderBy(*order)
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
+    )
 
 
 @register(
@@ -1868,24 +1925,14 @@ def dedup_embedding_cosine_lsh(
     section=SECTION,
 )
 def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-10 of probe vec_id=0: broadcast the
-    1-row probe, JVM-side dot kernel, TakeOrderedAndProject top-k.
-    The baseline ANN every index variant is measured against; at scale
-    the same plan is a broadcast of the query batch + per-partition
-    heap — no collect, no global sort."""
+    """Brute-force cosine top-10 of probe vec_id=0: the _probe_topk
+    sweep with no candidate predicate (broadcast 1-row probe, JVM-side
+    dot kernel, TakeOrderedAndProject top-k). The baseline ANN every
+    index variant is measured against."""
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
     )
-    probe = e.filter(F.col("vec_id") == 0).select(F.col("emb").alias("probe_emb"))
-    return (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(probe))
-        .select(
-            "vec_id", ratio(dot(F.col("emb"), F.col("probe_emb"))).alias("cosine")
-        )
-        .orderBy(F.col("cosine").desc(), "vec_id")
-        .limit(10)
-    )
+    return _probe_topk(e, [0], 10).select("vec_id", "cosine")
 
 
 @register(
@@ -1938,7 +1985,7 @@ def sim_knn_join_label(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda s: s.avg_val,
             ).alias("centroid")
         )
-        .withColumn("cnorm", F.sqrt(dot(F.col("centroid"), F.col("centroid"))))
+        .withColumn("cnorm", l2_norm(F.col("centroid")))
     )
     vecs = e.select(
         "vec_id",
@@ -2081,32 +2128,16 @@ def sim_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     of probes (vec_id < 5) in one pass — the realistic query shape
     (requests arrive in batches, not one probe at a time).
 
-    Plan: broadcast the probe batch, one corpus scan scores all probes
-    (JVM dot kernel), per-probe ranking via a window partitioned by
-    probe — the partition count equals the batch size, so ranking
-    parallelizes with the batch. Ranking orders on the ROUNDED cosine
-    (ties then vec_id) so the cut is stable under last-ulp float
-    divergence across engines. At 100 TB this is still one scan per
-    batch regardless of batch size — the win over per-probe loops."""
+    Plan: the _probe_topk sweep over a 5-id probe list — broadcast
+    the probe batch, one corpus scan scores all probes (JVM dot
+    kernel), per-probe ranking via a window partitioned by probe, so
+    ranking parallelizes with the batch. At 100 TB this is still one
+    scan per batch regardless of batch size — the win over per-probe
+    loops."""
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("emb")
     )
-    probes = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("probe_id"), F.col("emb").alias("probe_emb")
-    )
-    scored = (
-        e.crossJoin(F.broadcast(probes))
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id", "vec_id", ratio(dot(F.col("emb"), F.col("probe_emb"))).alias("cosine")
-        )
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("probe_id", "vec_id", "cosine")
-    )
+    return _probe_topk(e, list(range(5)), 5).select("probe_id", "vec_id", "cosine")
 
 
 # Tuned for isotropic (unclustered) unit vectors, where true neighbors
@@ -2164,12 +2195,13 @@ def _ann_lsh_oracle_sql() -> str:
 @register("sim_ann_lsh", oracle=_ann_lsh_oracle_sql(), section=SECTION)
 def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-10 for probe vec_id=0 via hyperplane LSH:
-    sign-signature per table -> bucket join probe vs corpus -> exact
-    dot on the candidate union. FULLY hash-checked against DuckDB
-    since r8: md5-derived integer planes over the exact x6 embedding
-    make the candidate set a pure function of the data, so the oracle
-    recomputes candidates + exact rescore (tests additionally assert
-    recall vs sim_topk_cosine).
+    sign-signature per table -> the _probe_topk sweep with "some
+    table's signature matches the probe's" as its candidate predicate
+    -> exact dot on that candidate union. FULLY hash-checked against
+    DuckDB since r8: md5-derived integer planes over the exact x6
+    embedding make the candidate set a pure function of the data, so
+    the oracle recomputes candidates + exact rescore (tests
+    additionally assert recall vs sim_topk_cosine).
 
     At 100 TB: signatures are one linear pass; each query touches only
     its buckets. The candidate set replaces the full O(n) scan of the
@@ -2185,22 +2217,10 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~2s of Catalyst analysis alone (see _signature_udf).
     sig_udf = _signature_udf(_int_planes("annlsh", N_TABLES, N_PLANES))
     sigs = e.select("vec_id", "emb", sig_udf("x6").alias("sigs"))
-    probe = sigs.filter(F.col("vec_id") == 0).select(
-        F.col("emb").alias("probe_emb"), F.col("sigs").alias("psigs")
-    )
     bucket_match = F.exists(
-        F.zip_with("sigs", "psigs", lambda a, b: a == b), lambda x: x
+        F.zip_with("c.sigs", "p.sigs", lambda a, b: a == b), lambda x: x
     )
-    return (
-        sigs.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(probe))
-        .filter(bucket_match)
-        .select(
-            "vec_id", ratio(dot(F.col("emb"), F.col("probe_emb"))).alias("cosine")
-        )
-        .orderBy(F.col("cosine").desc(), "vec_id")
-        .limit(10)
-    )
+    return _probe_topk(sigs, [0], 10, bucket_match).select("vec_id", "cosine")
 
 
 N_CELLS = 16  # IVF coarse-quantizer size
@@ -2407,7 +2427,8 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-10 for probe vec_id=0 via an IVF coarse quantizer:
     k-means-learn 16 centroids from the corpus, assign every vector to
     its nearest centroid (its cell), scan only the probe's N_PROBE=6
-    nearest cells, exact dot on those candidates. FULLY hash-checked
+    nearest cells (the candidate predicate of the _probe_topk sweep),
+    exact dot on those candidates. FULLY hash-checked
     against DuckDB since r8: training runs on the exact-integer grid
     (see _ivf_centroids), so the oracle re-derives the same centroids,
     cells, and candidates, then exact-rescoes (tests additionally
@@ -2429,27 +2450,20 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = e.select(
         "vec_id", "emb", "x6", _centroid_dots(cents).alias("cdots")
     )
+    # Each row carries its own cell and its N_PROBE nearest cells; the
+    # corpus side reads only `cell`, the probe side only `probe_cells`,
+    # and column pruning drops the other from each side.
     corpus = cells.select(
-        "vec_id", "emb", F.array_max("cdots")["k"].alias("cell")
-    )
-    probe = cells.filter(F.col("vec_id") == 0).select(
-        F.col("emb").alias("probe_emb"),
+        "vec_id",
+        "emb",
+        F.array_max("cdots")["k"].alias("cell"),
         F.transform(
             F.slice(F.reverse(F.array_sort("cdots")), 1, N_PROBE),
             lambda s: s["k"],
         ).alias("probe_cells"),
     )
-    return (
-        corpus.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(probe))
-        .filter(F.array_contains("probe_cells", F.col("cell")))
-        .select(
-            "vec_id",
-            ratio(dot(F.col("emb"), F.col("probe_emb"))).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), "vec_id")
-        .limit(10)
-    )
+    in_probe_cells = F.array_contains("p.probe_cells", F.col("c.cell"))
+    return _probe_topk(corpus, [0], 10, in_probe_cells).select("vec_id", "cosine")
 
 
 # ------------------------------------------------------------ text analysis
@@ -3054,9 +3068,7 @@ def sim_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
     )
-    from logdb_spark.functions.vector import dot
-
-    nrm = ratio(F.sqrt(dot(F.col("emb"), F.col("emb"))))
+    nrm = ratio(l2_norm(F.col("emb")))
     return (
         e.select("label", nrm.alias("nrm"))
         .groupBy("label")
@@ -3315,9 +3327,7 @@ def sim_centroid_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "label_a",
             "label_b",
-            ratio(
-                dot(va, vb) / (F.sqrt(dot(va, va)) * F.sqrt(dot(vb, vb)))
-            ).alias("cosine"),
+            ratio(cosine_sim(va, vb)).alias("cosine"),
         )
     )
 
@@ -4483,7 +4493,7 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The greedy argmax recursion is bounded (k=4 over an 8-candidate
     shortlist), so it UNROLLS into pure relational algebra: shortlist
-    = distributed brute-force top-8 (the sim_topk_cosine plan — at
+    = distributed brute-force top-8 (the _probe_topk sweep — at
     100 TB this prune is the heavy stage and stays a broadcast-probe
     scan + per-partition heap), then 4 chained argmax steps, each a
     semi-join of the 8-row shortlist against the previous picks with
@@ -4496,21 +4506,11 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
     )
-    probe = e.filter(F.col("vec_id") == 0).select(
-        F.col("emb").alias("probe_emb")
-    )
-    rel = (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(probe))
-        .select(
-            "vec_id",
-            "emb",
-            ratio(dot(F.col("emb"), F.col("probe_emb"))).alias("rel"),
+    rel = track_persist(
+        _probe_topk(e, [0], 8).select(
+            "vec_id", "emb", F.col("cosine").alias("rel")
         )
-        .orderBy(F.col("rel").desc(), "vec_id")
-        .limit(8)
     )
-    rel = track_persist(rel)
     ca = rel.select(F.col("vec_id").alias("va"), F.col("emb").alias("emb_a"))
     cb = rel.select(F.col("vec_id").alias("vb"), F.col("emb").alias("emb_b"))
     sims = track_persist(
@@ -5244,18 +5244,8 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
     )
-    probe = e.filter(F.col("vec_id") == 0).select(
-        F.col("emb").alias("probe_emb")
-    )
-    vec_short = (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(probe))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            ratio(dot(F.col("emb"), F.col("probe_emb"))).alias("cos"),
-        )
-        .orderBy(F.desc("cos"), "doc_id")
-        .limit(_RRF_K)
+    vec_short = _probe_topk(e, [0], _RRF_K).select(
+        F.col("vec_id").alias("doc_id"), F.col("cosine").alias("cos")
     )
     w_vec = bounded_global_window(
         F.desc("cos"), "doc_id",
@@ -5398,8 +5388,9 @@ def embed_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheap ANN prefilter: high overlap ⇒ the prefix preserves
     neighborhood structure and the 4× narrower vectors can drive the
     candidate stage. Plan shape: 10-row probe batch broadcast against
-    one corpus scan (deliberate broadcast pair scoring, the
-    sim_topk_cosine pattern), both rankings computed from the SAME
+    one corpus scan (deliberate broadcast pair scoring in the
+    _probe_topk shape, kept outside that kernel because each pair
+    carries two scores), both rankings computed from the SAME
     scored relation by two probe-partitioned window ranks — no join
     between the two top-5 sets, just one aggregation with rank
     predicates — so at 100 TB the cost is one corpus pass plus a
@@ -5420,10 +5411,7 @@ def embed_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "probe_id",
         "vec_id",
         ratio(dot(F.col("emb"), F.col("pemb"))).alias("cos_f"),
-        ratio(
-            dot(F.col("emb16"), F.col("pemb16"))
-            / (l2_norm(F.col("emb16")) * l2_norm(F.col("pemb16")))
-        ).alias("cos_t"),
+        ratio(cosine_sim(F.col("emb16"), F.col("pemb16"))).alias("cos_t"),
     )
     wf = Window.partitionBy("probe_id").orderBy(F.col("cos_f").desc(), "vec_id")
     wt = Window.partitionBy("probe_id").orderBy(F.col("cos_t").desc(), "vec_id")

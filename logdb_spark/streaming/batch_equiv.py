@@ -1077,10 +1077,11 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: state grows one signature row per doc ever seen (the stored
     LSH index); per batch, the new side's band rows broadcast against
-    the state bands, and the exact verify is FUSED into that band join
-    — each band row carries its doc's verify payload, so the whole
-    per-batch plan is one map-side scan of state with zero joins
-    against the unbounded corpus (VERDICT r8 #2). The verify kernel's
+    the state bands (llm._band_join, the batch ops' band join), and the
+    exact verify is FUSED into that join's output — each band row
+    carries its doc's verify payload, so the whole per-batch plan is
+    one map-side scan of state with zero joins against the unbounded
+    corpus (VERDICT r8 #2). The verify kernel's
     vocabulary is itself state updated from the NEW batch only — no
     full-corpus scan recurs per batch (VERDICT r8 #3). Both state
     tables are append-only — no state rewrite, so there is no
@@ -1091,10 +1092,12 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once OUTPUT."""
     import glob
     import json
+    import operator
     import os
     import shutil
 
     from logdb_spark.operators.llm import (
+        _band_join,
         _bands_from_sig,
         _minhash_sig_df,
         N_PERM,
@@ -1212,11 +1215,11 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"(acc, t) -> acc | element_at(map({entries}), t))"
             )
             shared = F.bit_count(
-                F.col("x.pl").bitwiseAND(F.col("y.pl"))
+                F.col("r.pl").bitwiseAND(F.col("l.pl"))
             ).cast("long")
         else:
             payload = F.col("toks")
-            shared = F.size(F.array_intersect("x.pl", "y.pl"))
+            shared = F.size(F.array_intersect("r.pl", "l.pl"))
 
         def bands(rel: DataFrame) -> DataFrame:
             return _bands_from_sig(
@@ -1224,19 +1227,13 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 carry=("pl",),
             )
 
-        jac = shared / (F.col("x.n") + F.col("y.n") - shared)
+        jac = shared / (F.col("r.n") + F.col("l.n") - shared)
         (
-            bands(all_rel)
-            .alias("y")
-            .join(
-                F.broadcast(bands(new_rel).alias("x")),
-                (F.col("x.band") == F.col("y.band"))
-                & (F.col("x.bucket") == F.col("y.bucket"))
-                & (F.col("x.doc_id") != F.col("y.doc_id"))
-                & (
-                    F.least("x.n", "y.n")
-                    >= F.greatest("x.n", "y.n") * F.lit(threshold)
-                ),
+            _band_join(
+                bands(all_rel),
+                F.broadcast(bands(new_rel)),
+                threshold,
+                operator.ne,
             )
             # NO distinct before the verify: a pair admitted by k
             # bands is verified k times (k ≤ n_bands), but the popcount
@@ -1246,8 +1243,8 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             # anti-join distincts doc_b anyway.
             .filter(jac >= threshold)
             .select(
-                F.least("x.doc_id", "y.doc_id").alias("doc_a"),
-                F.greatest("x.doc_id", "y.doc_id").alias("doc_b"),
+                F.least("r.doc_id", "l.doc_id").alias("doc_a"),
+                F.greatest("r.doc_id", "l.doc_id").alias("doc_b"),
             )
             .write.mode("append")
             .parquet(pairs_state)

@@ -438,6 +438,146 @@ def test_set_pairs_every_branch_matches_reference(spark, monkeypatch):
             monkeypatch.undo()
 
 
+def test_vec_and_band_kernels_every_branch_match_reference(spark):
+    """The three similarity kernels over generated inputs, each branch
+    against a pure-Python reference. The unit-vector corpus plants
+    6-dp cosine ties next to every probe (an exact copy and a 1e-12
+    perturbation of one near neighbour), and k cuts through a tie
+    group, so the vec_id tiebreak decides membership. _probe_topk runs
+    with one probe (TakeOrderedAndProject) and a probe batch (Window),
+    each with and without a candidate predicate; _vec_pairs with and
+    without candidates; _band_join in all three orientations, with a
+    size bound that prunes."""
+    import operator
+    import random
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from logdb_spark.operators.llm import _band_join, _probe_topk, _vec_pairs
+
+    rng = random.Random(11)
+
+    def unit(v):
+        s = sum(x * x for x in v) ** 0.5
+        return [x / s for x in v]
+
+    def dot(a, b):  # the JVM fold's order: acc + x*y, left to right
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    def r6(x):  # Spark round(x, 6): HALF_UP on the double's decimal string
+        return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+    dims = 16
+    vecs = [unit([rng.gauss(0, 1) for _ in range(dims)]) for _ in range(120)]
+    probes_at = [0, 1, 2, 3]
+    for i in probes_at:
+        near = unit([b + 0.5 * rng.gauss(0, 1) / dims**0.5 for b in vecs[i]])
+        vecs += [near, list(near), [x + 1e-12 * rng.gauss(0, 1) for x in near]]
+    # A pair at dot 0.4 − 2e-7: rounds to 0.4, so only a threshold on
+    # the UNROUNDED dot keeps it out of _vec_pairs.
+    base = vecs[5]
+    o = [rng.gauss(0, 1) for _ in range(dims)]
+    o = unit([x - dot(o, base) * b for x, b in zip(o, base)])
+    c = 0.4 - 2e-7
+    vecs.append([c * b + (1 - c * c) ** 0.5 * x for b, x in zip(base, o)])
+    ids = rng.sample(range(10, 10_000), len(vecs))
+    emb = dict(zip(ids, vecs))
+    assert r6(dot(emb[ids[5]], emb[ids[-1]])) == 0.4 > dot(emb[ids[5]], emb[ids[-1]])
+    probe_ids = [ids[i] for i in probes_at]
+    # Candidate-predicate group: random, except 0 on the probes and the
+    # planted rows, which (0 + 0) % 3 != 1 keeps next to every probe.
+    gid = {
+        v: 0 if i in probes_at or i >= 120 else rng.randint(0, 4)
+        for i, v in enumerate(ids)
+    }
+    rows = [(i, emb[i], gid[i]) for i in ids]
+    rng.shuffle(rows)
+    e = spark.createDataFrame(rows, "vec_id bigint, emb array<double>, g int")
+
+    def ranked(p, keep):
+        return sorted(
+            ((r6(dot(emb[v], emb[p])), v) for v in ids if v != p and keep(v, p)),
+            key=lambda sv: (-sv[0], sv[1]),
+        )
+
+    def cut_through_tie(p, keep):
+        scores = [s for s, _ in ranked(p, keep)]
+        k = next(j + 1 for j in range(len(scores) - 1) if scores[j] == scores[j + 1])
+        assert k <= 3, k  # the planted tie sits at the top
+        return k
+
+    def everything(v, p):
+        return True
+
+    def grp(v, p):
+        return (gid[v] + gid[p]) % 3 != 1
+
+    grp_col = (F.col("c.g") + F.col("p.g")) % 3 != 1
+    for keep, pred in ((everything, None), (grp, grp_col)):
+        p0 = probe_ids[0]
+        k = cut_through_tie(p0, keep)
+        df = _probe_topk(e, [p0], k, pred)
+        assert "TakeOrderedAndProject" in _plan_text(df)
+        got = [(r["cosine"], r["vec_id"]) for r in df.collect()]
+        assert got == ranked(p0, keep)[:k], pred
+        k = max(cut_through_tie(p, keep) for p in probe_ids)
+        df = _probe_topk(e, probe_ids, k, pred)
+        plan = _plan_text(df)
+        assert "Window" in plan and "TakeOrderedAndProject" not in plan
+        got = {(r["probe_id"], r["vec_id"], r["cosine"]) for r in df.collect()}
+        want = {(p, v, s) for p in probe_ids for s, v in ranked(p, keep)[:k]}
+        assert got == want, pred
+
+    t = 0.4
+    all_pairs = [(a, b) for a in ids for b in ids if a < b]
+    cand_pairs = [(a, b) for a, b in all_pairs if (7 * a + b) % 3 != 0]
+    cands = spark.createDataFrame(cand_pairs, "vec_a bigint, vec_b bigint")
+    for pairs, cand in ((all_pairs, None), (cand_pairs, cands)):
+        df = _vec_pairs(spark, e, t, candidates=cand)
+        assert ("BroadcastNestedLoopJoin" in _plan_text(df)) == (cand is None)
+        got = {(r["vec_a"], r["vec_b"], r["cosine"]) for r in df.collect()}
+        want = {
+            (a, b, r6(dot(emb[a], emb[b])))
+            for a, b in pairs
+            if dot(emb[a], emb[b]) >= t
+        }
+        assert len(want) >= 50 and got == want, cand is None
+
+    bands = [
+        (d, rng.randint(5, 30), band, rng.randint(0, 5))
+        for d in rng.sample(range(1, 1_000), 60)
+        for band in range(4)
+    ]
+    schema = "doc_id bigint, n bigint, band int, bucket int"
+    for orient, left, right in (
+        (operator.lt, bands, bands),
+        (operator.ne, bands, [b for b in bands if b[0] % 3 == 0]),
+        (None, [b for b in bands if b[0] % 2], [b for b in bands if not b[0] % 2]),
+    ):
+        df = _band_join(
+            spark.createDataFrame(left, schema),
+            F.broadcast(spark.createDataFrame(right, schema)),
+            0.7,
+            orient,
+        ).select("l.doc_id", "r.doc_id", "l.band")
+        got = sorted(tuple(r) for r in df.collect())
+        same_bucket = [
+            (x, y)
+            for x in left
+            for y in right
+            if x[2:] == y[2:] and (orient is None or orient(x[0], y[0]))
+        ]
+        want = sorted(
+            (x[0], y[0], x[2])
+            for x, y in same_bucket
+            if min(x[1], y[1]) >= max(x[1], y[1]) * 0.7
+        )
+        assert 0 < len(want) < len(same_bucket), orient  # the bound prunes
+        assert got == want, orient
+
+
 def test_incremental_minhash_matches_batch_restriction(spark):
     """dedup_incremental_minhash must equal the FULL dedup pipeline's
     ground truth restricted to pairs touching the new batch: same md5

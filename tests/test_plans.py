@@ -963,3 +963,29 @@ def test_bounded_global_window_declarations_hold(spark):
     for name in ("log_rate_spike", "log_error_budget_burndown",
                  "sim_hybrid_rrf", "text_bpe_vocab"):
         assert OPS[name].fn(spark, SF_SMALL).count() >= 0
+
+
+def test_dumpplans_normalized_dumps_of_one_query_are_equal(spark):
+    """tools.dumpplans strips what differs between two plannings of the
+    same query — expression ids, lambda-variable counters and scratch
+    directory suffixes — and nothing else, so a diff of two dump
+    directories shows only node changes."""
+    from pyspark.sql import functions as F
+
+    from tools.dumpplans import normalize
+
+    def dump():
+        df = spark.range(10).select(
+            F.transform(F.array("id", "id"), lambda x: x + 1).alias("a")
+        )
+        return df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+
+    first, second = dump(), dump()
+    assert first != second
+    assert normalize(first) == normalize(second)
+    assert normalize(first.replace("+ 1", "+ 2")) != normalize(second)
+    assert normalize(
+        "[file:/tmp/logdb_scratch_vkiwwx_2/logdb_sdm_dias7fwj/docs_state]"
+    ) == "[file:/tmp/logdb_scratch_*/logdb_sdm_*/docs_state]"

@@ -2,15 +2,37 @@
 
 Usage: python -m tools.dumpplans <tag> <op> [<op> ...]
 Writes plans/<tag>/<op>_<suffix>.txt (suffix via $PLAN_SUFFIX, default
-'before'). Ops that materialize side state before returning their
-DataFrame (table/stream lifecycles) still work — the plan captured is
-the one the bench's noop sink executes.
+'before'); an absolute <tag> is used as the output directory itself.
+Ops that materialize side state before returning their DataFrame
+(table/stream lifecycles) still work — the plan captured is the one
+the bench's noop sink executes.
+
+The written text drops what differs between two sessions planning the
+same query: expression ids (``vec_id#123L`` → ``vec_id#L``), ``plan_id=``
+numbers, lambda-variable counters (``lambda x_90#`` → ``lambda x_#``)
+and the random suffix of scratch directories (``/logdb_sdm_e3ytgb06`` →
+``/logdb_sdm_*``). ``diff -r`` between two dump directories then shows
+only node changes.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
+
+_SESSION_IDS = (
+    (re.compile(r"(#|plan_id=)\d+"), r"\1"),
+    (re.compile(r"(lambda \w+?_)\d+#"), r"\1#"),
+    (re.compile(r"(/logdb_[a-z_]+?_)[a-z0-9_]{8}(?=[/\],\s]|$)"), r"\1*"),
+)
+
+
+def normalize(plan: str) -> str:
+    """``plan`` without its per-session ids (see the module docstring)."""
+    for pattern, repl in _SESSION_IDS:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def main() -> int:
@@ -24,11 +46,16 @@ def main() -> int:
     from logdb_spark.registry import all_operators
 
     spark = get_spark("dumpplans")
+    # Wide projections (the MinHash signature's 64+ columns) would
+    # otherwise print as "... N more fields" and hide their changes.
+    spark.conf.set("spark.sql.debug.maxToStringFields", "10000")
     ops = all_operators()
     for name in names:
         df = ops[name].fn(spark, sf_dir)
-        txt = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
+        txt = normalize(
+            df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
         )
         with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as f:
             f.write(txt)
