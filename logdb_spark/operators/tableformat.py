@@ -25,7 +25,7 @@ and the driver-side arithmetic is unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logdb_spark.functions.numeric import dec4, dround
@@ -33,7 +33,15 @@ from logdb_spark.functions.ranking import bounded_global_window
 from logdb_spark.registry import register
 from logdb_spark.sources.load import load_table
 from logdb_spark.sources.scratch import scratch_dir
-from logdb_spark.tablefmt import CommitConflict, TxTable, write_grouped
+from logdb_spark.tablefmt import (
+    CommitConflict,
+    TxTable,
+    choose_delete_strategy,
+    cow_delete,
+    mor_delete,
+    touched_files,
+    write_grouped,
+)
 
 SECTION = "2.O table format"
 
@@ -65,6 +73,11 @@ def _year_table(spark: SparkSession, sf_dir: str) -> tuple[TxTable, list[dict]]:
     return tx, adds
 
 
+def _p_in_years(years: tuple[int, ...]) -> Column:
+    """'P'-status rows of the given order years (``g`` = the year)."""
+    return (F.col("o_orderstatus") == "P") & F.col("g").isin(*years)
+
+
 def _cow_delete_p_years(
     tx: TxTable,
     years: tuple[int, int],
@@ -72,28 +85,15 @@ def _cow_delete_p_years(
     meta: dict | None = None,
 ) -> list[str]:
     """Copy-on-write delete of 'P'-status rows from the given year
-    files of a ``_year_table``: discover the touched files from a
-    bounded grouped distinct, rewrite ONLY those files without the
-    matching rows, and commit the reference swap — the remove actions
-    carry the touched files' full PRE-IMAGE add-entries (path + rows
-    + stats), which is what the row-level change feed reads deletes
-    from and what vacuum sizes its reclaim with. Shared by
-    table_delete_cow, table_vacuum_orphans, table_vacuum_delete, and
-    the byte-identity test. Returns the removed (touched) paths."""
-    pred = (F.col("o_orderstatus") == "P") & F.col("g").isin(*years)
-    snap = tx.read().withColumn("g", F.year("o_orderdate"))
-    touched_rows = (
-        snap.filter(pred)
-        .select("g")
-        .distinct()
-        .collect()  # driver-scalar: one row per FILE containing matches (≤7 years)
+    files of a ``_year_table`` (or a shallow clone of one) through
+    tablefmt.cow_delete: only the touched year-files are read and
+    rewritten. Shared by table_delete_cow, table_vacuum_orphans,
+    table_vacuum_delete, table_vacuum_read_horizon,
+    table_shallow_clone, table_remove_conflict_abort's writer A and
+    tools/morbench.py. Returns the removed (touched) paths."""
+    return cow_delete(
+        tx, _p_in_years(years), F.year("o_orderdate"), subdir, "o_orderkey", meta
     )
-    touched = sorted(f"data1/g={r['g']}" for r in touched_rows)
-    live_by_path = {e["path"]: e for e in tx.live_files()}
-    rewrite = snap.filter(F.col("g").isin([r["g"] for r in touched_rows]))
-    adds_rw = write_grouped(rewrite.filter(~pred), tx.root, subdir, "o_orderkey")
-    tx.commit(adds_rw, removes=[live_by_path[p] for p in touched], meta=meta)
-    return touched
 
 
 def _snapshot_summary(df: DataFrame, version: int, n_files: int) -> DataFrame:
@@ -1307,29 +1307,7 @@ def table_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Diverge: COW delete on the CLONE only (rewrites land under the
     # clone root; shared source files merely lose their clone refs).
-    pred = (F.col("o_orderstatus") == "P") & F.year("o_orderdate").isin(
-        1996, 1999
-    )
-    snap = clone.read().withColumn("g", F.year("o_orderdate"))
-    touched_rows = (
-        snap.filter(pred)
-        .select("g")
-        .distinct()
-        .collect()  # driver-scalar: one row per FILE containing matches (≤7 years)
-    )
-    live_by_path = {e["path"]: e for e in clone.live_files()}
-    touched = sorted(
-        os.path.join(tx.root, f"data1/g={r['g']}") for r in touched_rows
-    )
-    rewrite = snap.filter(
-        F.col("g").isin([r["g"] for r in touched_rows])
-    ).filter(~pred)
-    adds_rw = write_grouped(rewrite, clone.root, "rw1", "o_orderkey")
-    clone.commit(
-        adds_rw,
-        removes=[live_by_path[p] for p in touched],
-        meta={"ts": 2000},
-    )
+    _cow_delete_p_years(clone, (1996, 1999), subdir="rw1", meta={"ts": 2000})
 
     # Ownership test matches vacuum's (ADVICE r11): commonpath, not a
     # string prefix — a sibling dir sharing the root's string prefix
@@ -1412,20 +1390,12 @@ def table_remove_conflict_abort(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Writer B stages a compaction of the two 'P'-year files (their
     # rows repacked into one file) against parent v1...
-    pred = (F.col("o_orderstatus") == "P") & F.col("g").isin(1996, 1999)
-    snap = tx.read().withColumn("g", F.year("o_orderdate"))
-    touched_rows = (
-        snap.filter(pred)
-        .select("g")
-        .distinct()
-        .collect()  # driver-scalar: one row per FILE containing matches (≤7 years)
+    touched, _ = touched_files(
+        tx, _p_in_years((1996, 1999)), F.year("o_orderdate")
     )
-    years = sorted(r["g"] for r in touched_rows)
-    b_removes = [f"data1/g={y}" for y in years]
+    b_removes = sorted(e["path"] for e in touched)
     b_adds = write_grouped(
-        snap.filter(F.col("g").isin(years)).drop("g").withColumn(
-            "g", F.lit(0)
-        ),
+        tx.read(files=touched).withColumn("g", F.lit(0)),
         tx.root,
         "compactB",
         "o_orderkey",
@@ -1896,22 +1866,16 @@ def table_merge_on_read_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         meta={"ts": 2000},
     )
 
-    pred = (F.col("o_orderstatus") == "P") & F.col("g").isin(1995, 2000)
-    del_keys = (
-        tx.read().withColumn("g", F.year("o_orderdate")).filter(pred)
-        .select("o_orderkey", F.lit(0).alias("g"))
+    dels = mor_delete(
+        tx,
+        tx.read()
+        .withColumn("g", F.year("o_orderdate"))
+        .filter(_p_in_years((1995, 2000))),
+        "o_orderkey",
+        "dv1",
+        meta={"ts": 3000},
     )
-    dv_adds = write_grouped(del_keys, tx.root, "dv1", "o_orderkey")
-    tx.commit(
-        [{**a, "kind": "eq_delete", "key": "o_orderkey"} for a in dv_adds],
-        meta={
-            "ts": 3000,
-            # Merged, never overwritten: a protocol that declared only
-            # its own feature would retract previously demanded ones.
-            "protocol": tx.protocol_with("equality_deletes"),
-        },
-    )
-    delete_file_rows = dv_adds[0]["rows"]
+    delete_file_rows = sum(d["rows"] for d in dels)
     cow_rewrite_rows = sum(
         e["rows"]
         for e in tx.live_files()
@@ -1992,60 +1956,25 @@ def table_merge_on_read_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _auto_delete(
     tx: TxTable, pred, subdir: str, ts: int, threshold: float = 0.1
 ) -> tuple[str, int]:
-    """Cost-routed DELETE: measure matched rows vs touched-file rows
-    (O(files) metadata — file row counts ride the commit stats; the
-    matched count is one bounded agg), let
-    tablefmt.choose_delete_strategy pick, and execute that branch —
-    COW rewrites exactly the touched files without the matched rows;
-    MOR commits one equality-delete key file (declaring the feature).
+    """Cost-routed DELETE on a ``_year_table``: tablefmt.touched_files
+    gives the matched rows (one bounded agg) and the touched files,
+    whose row counts ride the commit stats (O(files) metadata);
+    tablefmt.choose_delete_strategy picks, and that branch's kernel
+    runs — tablefmt.cow_delete rewrites exactly the touched files,
+    tablefmt.mor_delete commits one equality-delete key file. A
+    predicate that matches nothing commits nothing.
     Returns (strategy, matched_rows)."""
-    from logdb_spark.tablefmt import choose_delete_strategy
-
-    snap = tx.read().withColumn("g", F.year("o_orderdate"))
-    matched = snap.filter(pred)
-    touched_years = {
-        r["g"]
-        for r in matched.select("g").distinct()
-        .collect()  # driver-scalar: one row per touched FILE (≤7 years)
-    }
-    matched_rows = matched.count()  # driver-scalar: bounded single count
-    live = {
-        e["path"]: e
-        for e in tx.live_files()
-        if e.get("kind", "data") == "data"
-    }
-    touched = [
-        e
-        for p, e in live.items()
-        if int(p.rsplit("g=", 1)[-1]) in touched_years
-    ]
+    g = F.year("o_orderdate")
+    touched, matched_rows = touched_files(tx, pred, g)
     strategy = choose_delete_strategy(
         matched_rows, sum(e["rows"] for e in touched), threshold
     )
+    meta = {"ts": ts, "delete_strategy": strategy}
     if strategy == "cow":
-        rewrite = snap.filter(
-            F.col("g").isin(sorted(touched_years)) & ~pred
-        )
-        tx.commit(
-            write_grouped(rewrite, tx.root, subdir, "o_orderkey"),
-            removes=touched,
-            meta={"ts": ts, "delete_strategy": "cow"},
-        )
+        cow_delete(tx, pred, g, subdir, "o_orderkey", meta)
     else:
-        dv = write_grouped(
-            matched.select("o_orderkey", F.lit(0).alias("g")),
-            tx.root,
-            subdir,
-            "o_orderkey",
-        )
-        tx.commit(
-            [{**dv[0], "kind": "eq_delete", "key": "o_orderkey"}],
-            meta={
-                "ts": ts,
-                "delete_strategy": "mor",
-                "protocol": tx.protocol_with("equality_deletes"),
-            },
-        )
+        keys = tx.read().withColumn("g", g).filter(pred)
+        mor_delete(tx, keys, "o_orderkey", subdir, meta=meta)
     return strategy, matched_rows
 
 
@@ -2132,6 +2061,41 @@ def table_delete_cost_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _mor_upsert_table(
+    spark: SparkSession, sf_dir: str, prefix: str
+) -> tuple[TxTable, DataFrame]:
+    """The MOR upsert table shared by table_merge_on_read_upsert and
+    stream_table_cdf_mor: v1 lands orders as per-year files; v2 is one
+    tablefmt.mor_delete commit of the updated rows (+10% o_totalprice,
+    exact DECIMAL arithmetic, for 'P'-status 1998 orders) together
+    with an equality delete of their keys. Returns (table, updated
+    rows)."""
+    orders = _orders_with_year(spark, sf_dir)
+    tx = TxTable(spark, scratch_dir(prefix))
+    tx.commit(
+        write_grouped(orders, tx.root, "d1", "o_orderkey"), meta={"ts": 1000}
+    )
+    pred = (F.col("o_orderstatus") == "P") & (F.col("g") == 1998)
+    updated = (
+        tx.read()
+        .withColumn("g", F.year("o_orderdate"))
+        .filter(pred)
+        .withColumn(
+            "o_totalprice",
+            dround(dec4("o_totalprice") * F.lit(1.1), 2).cast("double"),
+        )
+    )
+    mor_delete(
+        tx,
+        updated,
+        "o_orderkey",
+        "uv1",
+        adds=write_grouped(updated, tx.root, "u1", "o_orderkey"),
+        meta={"ts": 2000},
+    )
+    return tx, updated
+
+
 @register(
     "table_merge_on_read_upsert",
     oracle="""
@@ -2165,9 +2129,11 @@ def table_merge_on_read_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     Iceberg-v2 MOR UPDATE shape, and it is what a CDC-apply sink
     commits per batch.
 
-    Fixture: the orders table lands as per-year files; one upsert
-    raises o_totalprice by 10% (exact DECIMAL arithmetic, 2-dp
-    canonical rounding) for 'P'-status 1998 orders. Certificates:
+    Fixture: ``_mor_upsert_table`` (shared with
+    stream_table_cdf_mor) lands the orders table as per-year files,
+    then one tablefmt.mor_delete upsert raises o_totalprice by 10%
+    (exact DECIMAL arithmetic, 2-dp canonical rounding) for
+    'P'-status 1998 orders. Certificates:
     row count unchanged, every key unique after the upsert
     (no_duplicate_keys — the delete and the insert landed
     atomically), the whole upsert was ONE commit (single_commit),
@@ -2180,34 +2146,9 @@ def table_merge_on_read_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     MERGE — the two ops are the two physical strategies real formats
     offer, and the crossover (change density × file overlap) is the
     optimizer decision documented in SCALING.md."""
-    orders = _orders_with_year(spark, sf_dir)
-    tx = TxTable(spark, scratch_dir("logdb_txmoru_"))
-    tx.commit(
-        write_grouped(orders, tx.root, "d1", "o_orderkey"), meta={"ts": 1000}
-    )
-
-    pred = (F.col("o_orderstatus") == "P") & (F.col("g") == 1998)
-    updated = (
-        tx.read()
-        .withColumn("g", F.year("o_orderdate"))
-        .filter(pred)
-        .withColumn(
-            "o_totalprice",
-            dround(dec4("o_totalprice") * F.lit(1.1), 2).cast("double"),
-        )
-    )
-    adds_new = write_grouped(updated, tx.root, "u1", "o_orderkey")
-    del_keys = updated.select("o_orderkey", F.lit(0).alias("g"))
-    dv = write_grouped(del_keys, tx.root, "uv1", "o_orderkey")
-    v_before = tx.latest_version()
-    v_commit, _ = tx.commit(
-        adds_new + [{**dv[0], "kind": "eq_delete", "key": "o_orderkey"}],
-        meta={
-            "ts": 2000,
-            "protocol": tx.protocol_with("equality_deletes"),
-        },
-    )
-    single_commit = v_commit == v_before + 1
+    tx, updated = _mor_upsert_table(spark, sf_dir, "logdb_txmoru_")
+    # v1 is the load, so a head at v2 proves the upsert was one commit.
+    single_commit = tx.latest_version() == 2
 
     head = tx.read()
     dup_keys = (

@@ -1784,12 +1784,14 @@ def stream_table_cdf_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     updated keys, table_merge_on_read_upsert's shape) replays as
     retract-then-insert — exactly what a CDC-apply sink executes.
 
-    Fixture: v1 lands orders as per-year files; v2 is the MOR upsert
-    (+10% o_totalprice on 'P'-status 1998 orders, exact DECIMAL
-    arithmetic). The feed's per-(version, change_type) rollup is
-    restated by the oracle: v1 inserts = the whole table, v2 deletes =
-    the updated keys (price NULL — retractions carry no row data), v2
-    inserts = the updated rows at their new price.
+    Fixture: table_merge_on_read_upsert's table, built by the same
+    ``operators.tableformat._mor_upsert_table``: v1 lands orders as
+    per-year files; v2 is the MOR upsert (+10% o_totalprice on
+    'P'-status 1998 orders, exact DECIMAL arithmetic). The feed's
+    per-(version, change_type) rollup is restated by the oracle: v1
+    inserts = the whole table, v2 deletes = the updated keys (price
+    NULL — retractions carry no row data), v2 inserts = the updated
+    rows at their new price.
     tests/test_streaming.py::test_txlog_cdf_mor_emits_key_retractions
     additionally replays the feed version-by-version and proves it
     reconstructs the head snapshot, and pins that a purge compaction
@@ -1800,41 +1802,10 @@ def stream_table_cdf_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     pays; planning stays O(files-per-commit) metadata. This is the
     change-feed face of the MOR write-amplification win measured in
     tools/morbench.py."""
+    from logdb_spark.operators.tableformat import _mor_upsert_table
     from logdb_spark.sources.txlogstream import register_txlogstream
-    from logdb_spark.tablefmt import TxTable, write_grouped
 
-    orders = load_table(spark, sf_dir, "orders").withColumn(
-        "g", F.year("o_orderdate")
-    )
-    tx = TxTable(spark, scratch_dir("logdb_stcdfmor_"))
-    tx.commit(
-        write_grouped(orders, tx.root, "d1", "o_orderkey"), meta={"ts": 1000}
-    )
-    pred = (F.col("o_orderstatus") == "P") & (F.col("g") == 1998)
-    updated = (
-        tx.read()
-        .withColumn("g", F.year("o_orderdate"))
-        .filter(pred)
-        .withColumn(
-            "o_totalprice",
-            dround(dec4("o_totalprice") * F.lit(1.1), 2).cast("double"),
-        )
-    )
-    adds_new = write_grouped(updated, tx.root, "u1", "o_orderkey")
-    dv = write_grouped(
-        updated.select("o_orderkey", F.lit(0).alias("g")),
-        tx.root,
-        "uv1",
-        "o_orderkey",
-    )
-    tx.commit(
-        adds_new + [{**dv[0], "kind": "eq_delete", "key": "o_orderkey"}],
-        meta={
-            "ts": 2000,
-            "protocol": tx.protocol_with("equality_deletes"),
-        },
-    )
-
+    tx, _ = _mor_upsert_table(spark, sf_dir, "logdb_stcdfmor_")
     register_txlogstream(spark)
     feed = (
         spark.read.format("txlogstream")

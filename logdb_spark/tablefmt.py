@@ -24,6 +24,10 @@ A "data file" is one parquet directory written by a single
 ``partitionBy`` task (``subdir/g=<value>``) — the commit unit the log
 references. Locally these are small directories; on an object store
 they are the same immutable-prefix contract.
+
+Every row-level change goes through one of two kernels: ``cow_delete``
+(rewrite the touched files) or ``mor_delete`` (commit an
+equality-delete key file, with new data files for an upsert).
 """
 
 from __future__ import annotations
@@ -36,7 +40,7 @@ import tempfile
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _VFILE = re.compile(r"^v(\d{6})\.json$")
@@ -993,6 +997,87 @@ def write_grouped(
         }
         for gdir, n, mm in stats
     ]
+
+
+def touched_files(
+    tx: TxTable, pred: Column, g: Column
+) -> tuple[list[dict], int]:
+    """(live data entries holding a row where ``pred`` is TRUE, number
+    of such rows) on a table ``write_grouped`` wrote with grouping
+    expression ``g`` (``pred`` may name it as column ``g``): one
+    bounded count per distinct ``g`` over the matches, each value
+    mapped to the entries whose last path component is ``g=<v>`` —
+    absolute paths (a shallow clone's shared files) map too."""
+    matches = tx.read().withColumn("g", g).filter(pred).groupBy("g")
+    counts = {
+        f"g={r['g']}": r["count"]
+        for r in matches.count().collect()  # driver-scalar: one row per FILE containing matches
+    }
+    entries = [
+        e
+        for e in tx.live_files()
+        if e.get("kind", "data") == "data"
+        and os.path.basename(e["path"]) in counts
+    ]
+    return entries, sum(counts.values())
+
+
+def cow_delete(
+    tx: TxTable,
+    pred: Column,
+    g: Column,
+    subdir: str,
+    key: str,
+    meta: dict | None = None,
+) -> list[str]:
+    """Copy-on-write DELETE: rewrite only the ``touched_files`` into
+    ``subdir`` (stats on ``key``), read with the live equality deletes
+    so committed MOR deletes stay applied, keeping every row where
+    ``pred`` is not TRUE (NULL keeps the row — SQL DELETE), and commit
+    with the touched files' PRE-IMAGE entries as removes — what the
+    change feed reads deleted rows from and vacuum sizes its reclaim
+    with. Returns the removed paths, sorted; no match writes and
+    commits nothing."""
+    touched, _ = touched_files(tx, pred, g)
+    if not touched:
+        return []
+    dels = [e for e in tx.live_files() if e.get("kind") == "eq_delete"]
+    keep = tx.read(files=touched + dels).withColumn("g", g)
+    tx.commit(
+        write_grouped(
+            keep.filter(~pred.eqNullSafe(True)), tx.root, subdir, key
+        ),
+        removes=touched,
+        meta=meta,
+    )
+    return sorted(e["path"] for e in touched)
+
+
+def mor_delete(
+    tx: TxTable,
+    keys: DataFrame,
+    key: str,
+    subdir: str,
+    adds: list[dict] | tuple = (),
+    meta: dict | None = None,
+) -> list[dict]:
+    """Merge-on-read DELETE: write the ``key`` column of ``keys`` as one
+    equality-delete file under ``subdir`` and commit it with ``adds``
+    as ONE version (an upsert: the delete spares rows of its own
+    commit) and the ``equality_deletes`` protocol feature merged into
+    ``meta``. Empty ``keys`` commit ``adds`` alone, or nothing.
+    Returns the committed equality-delete entries."""
+    dels = [
+        {**a, "kind": "eq_delete", "key": key}
+        for a in write_grouped(
+            keys.select(key, F.lit(0).alias("g")), tx.root, subdir, key
+        )
+    ]
+    if dels:
+        meta = {**(meta or {}), "protocol": tx.protocol_with("equality_deletes")}
+    if dels or adds:
+        tx.commit(list(adds) + dels, meta=meta)
+    return dels
 
 
 def _stats_from_footers(

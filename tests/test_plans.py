@@ -989,3 +989,21 @@ def test_dumpplans_normalized_dumps_of_one_query_are_equal(spark):
     assert normalize(
         "[file:/tmp/logdb_scratch_vkiwwx_2/logdb_sdm_dias7fwj/docs_state]"
     ) == "[file:/tmp/logdb_scratch_*/logdb_sdm_*/docs_state]"
+
+
+def test_dumpplans_captures_the_cow_rewrite_of_touched_files_only(spark):
+    """tools.dumpplans records every DataFrame an operator writes while
+    it builds. table_delete_cow's copy-on-write rewrite, its last
+    write, scans only the two year-files holding a 'P' match, not the
+    whole seven-file snapshot; the writer is restored afterwards."""
+    from pyspark.sql import DataFrameWriter
+
+    from tools.dumpplans import capture_writes
+
+    parquet = DataFrameWriter.parquet
+    with capture_writes() as written:
+        OPS["table_delete_cow"].fn(spark, SF_SMALL)
+    assert DataFrameWriter.parquet is parquet
+    assert len(written) == 2  # the year table, then the rewrite
+    scanned = {"/".join(f.split("/")[-3:-1]) for f in written[-1].inputFiles()}
+    assert scanned == {"data1/g=1996", "data1/g=1999"}

@@ -896,6 +896,65 @@ def test_auto_delete_forces_each_branch(spark):
     assert tx.read().count() == before - n_dense - n_sparse
 
 
+def test_row_level_kernels_commit_nothing_when_nothing_matches(spark):
+    """Degenerate input: a delete that matches no row leaves the log
+    where it was, on every path. A cost-routed delete with no match
+    (routed to MOR: nothing to rewrite) and a repeated COW delete
+    whose 'P' rows are already gone commit nothing; mor_delete
+    without keys commits its adds alone, with no delete file and no
+    protocol demand."""
+    from logdb_spark.operators.tableformat import (
+        _auto_delete,
+        _cow_delete_p_years,
+        _year_table,
+    )
+    from logdb_spark.tablefmt import cow_delete, mor_delete
+
+    tx, adds = _year_table(spark, SF_SMALL)
+    v = tx.latest_version()
+    none = F.col("o_orderkey") < -1
+    assert _auto_delete(tx, none, "dv1", ts=100) == ("mor", 0)
+    assert cow_delete(tx, none, F.year("o_orderdate"), "rw0", "o_orderkey") == []
+    assert tx.latest_version() == v
+
+    assert _cow_delete_p_years(tx, (1996, 1999), subdir="rw1")
+    v = tx.latest_version()
+    assert _cow_delete_p_years(tx, (1996, 1999), subdir="rw2") == []
+    assert tx.latest_version() == v
+
+    keys = tx.read().filter(none)
+    assert mor_delete(tx, keys, "o_orderkey", "dv2") == []
+    assert tx.latest_version() == v
+    assert mor_delete(tx, keys, "o_orderkey", "dv3", adds=adds[:1]) == []
+    assert tx.latest_version() == v + 1
+    assert tx.protocol() is None
+
+
+def test_cow_delete_keeps_rows_whose_predicate_is_null(spark):
+    """SQL DELETE removes only the rows whose predicate is TRUE: a row
+    where it is NULL survives the COW rewrite. The predicate here is
+    NULL on every even key and dense enough that the router takes
+    the COW branch; the rewrite must drop exactly the matched rows
+    and keep every even key."""
+    from logdb_spark.operators.tableformat import _auto_delete, _year_table
+    from logdb_spark.tablefmt import cow_delete
+
+    odd = F.col("o_orderkey") % 2 == 1
+    pred = F.when(odd, F.col("o_orderstatus").isin("F", "O"))
+
+    tx, _ = _year_table(spark, SF_SMALL)
+    before = tx.read()
+    n, evens = before.count(), before.filter(~odd).count()
+    strat, matched = _auto_delete(tx, pred, "rw1", ts=100)
+    assert strat == "cow" and 0 < matched < n - evens
+    assert tx.read().count() == n - matched
+    assert tx.read().filter(~odd).count() == evens
+
+    tx, _ = _year_table(spark, SF_SMALL)
+    assert cow_delete(tx, pred, F.year("o_orderdate"), "rw1", "o_orderkey")
+    assert tx.read().count() == n - matched
+
+
 def test_write_grouped_footer_stats_match_spark_agg(spark, tmp_path):
     """r13: write_grouped derives per-file stats from the written
     parquet FOOTERS (zero extra Spark actions). Parity-pin the footer

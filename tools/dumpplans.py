@@ -5,7 +5,10 @@ Writes plans/<tag>/<op>_<suffix>.txt (suffix via $PLAN_SUFFIX, default
 'before'); an absolute <tag> is used as the output directory itself.
 Ops that materialize side state before returning their DataFrame
 (table/stream lifecycles) still work — the plan captured is the one
-the bench's noop sink executes.
+the bench's noop sink executes. Every DataFrame the op passes to
+``DataFrameWriter.parquet`` while it builds (table-format writes and
+rewrites, ``foreachBatch`` batches) is dumped too, in write order, as
+<op>_<suffix>.write<N>.txt.
 
 The written text drops what differs between two sessions planning the
 same query: expression ids (``vec_id#123L`` → ``vec_id#L``), ``plan_id=``
@@ -17,6 +20,7 @@ only node changes.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 import sys
@@ -35,6 +39,25 @@ def normalize(plan: str) -> str:
     return plan
 
 
+@contextlib.contextmanager
+def capture_writes():
+    """Yield a list that collects every DataFrame passed to
+    ``DataFrameWriter.parquet`` inside the block; the writes still run."""
+    from pyspark.sql import DataFrameWriter
+
+    written, parquet = [], DataFrameWriter.parquet
+
+    def recording(self, *args, **kwargs):
+        written.append(self._df)
+        return parquet(self, *args, **kwargs)
+
+    DataFrameWriter.parquet = recording
+    try:
+        yield written
+    finally:
+        DataFrameWriter.parquet = parquet
+
+
 def main() -> int:
     tag, names = sys.argv[1], sys.argv[2:]
     suffix = os.environ.get("PLAN_SUFFIX", "before")
@@ -51,16 +74,22 @@ def main() -> int:
     spark.conf.set("spark.sql.debug.maxToStringFields", "10000")
     ops = all_operators()
     for name in names:
-        df = ops[name].fn(spark, sf_dir)
-        txt = normalize(
-            df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
+        with capture_writes() as written:
+            df = ops[name].fn(spark, sf_dir)
+        dumps = [(f"{name}_{suffix}.txt", df)] + [
+            (f"{name}_{suffix}.write{n}.txt", w)
+            for n, w in enumerate(written, 1)
+        ]
+        for fname, d in dumps:
+            txt = normalize(
+                d._sc._jvm.PythonSQLUtils.explainString(
+                    d._jdf.queryExecution(), "formatted"
+                )
             )
-        )
-        with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as f:
-            f.write(txt)
+            with open(os.path.join(outdir, fname), "w") as f:
+                f.write(txt)
+            print(f"wrote {fname} ({len(txt)} bytes)")
         spark.catalog.clearCache()
-        print(f"wrote {name}_{suffix}.txt ({len(txt)} bytes)")
     return 0
 
 

@@ -4,10 +4,12 @@ Same logical delete ('P'-status rows of two order-years) executed both
 ways against identical year-partitioned §2.O tables at a given sf:
 
 - COW: rewrite every touched year-file without the matched rows,
-  commit the reference swap (operators/tableformat.py::
-  _cow_delete_p_years — the table_delete_cow path).
+  commit the reference swap (tablefmt.cow_delete through
+  operators/tableformat.py::_cow_delete_p_years — the
+  table_delete_cow path).
 - MOR: write one equality-delete key file, commit it
-  (table_merge_on_read_delete path, no purge).
+  (tablefmt.mor_delete — the table_merge_on_read_delete path, no
+  purge).
 
 Bytes written is the headline (deterministic on any host — the
 wall-clock on this box swings 2×, see SCALING.md's variance notes);
@@ -111,11 +113,12 @@ def main() -> int:
     from logdb_spark.operators.tableformat import (
         _cow_delete_p_years,
         _orders_with_year,
+        _p_in_years,
         _year_table,
     )
     from logdb_spark.plans.session import get_spark
     from logdb_spark.sources.scratch import scratch_dir
-    from logdb_spark.tablefmt import TxTable, write_grouped
+    from logdb_spark.tablefmt import TxTable, mor_delete, write_grouped
 
     spark = get_spark("morbench")
     years = (1995, 2000)
@@ -137,17 +140,14 @@ def main() -> int:
         write_grouped(orders, tx_mor.root, "data1", "o_orderkey"),
         meta={"ts": 1000},
     )
-    pred = (F.col("o_orderstatus") == "P") & F.col("g").isin(*years)
     t0 = time.perf_counter()
-    del_keys = (
+    dels = mor_delete(
+        tx_mor,
         tx_mor.read()
         .withColumn("g", F.year("o_orderdate"))
-        .filter(pred)
-        .select("o_orderkey", F.lit(0).alias("g"))
-    )
-    dv = write_grouped(del_keys, tx_mor.root, "dv1", "o_orderkey")
-    tx_mor.commit(
-        [{**dv[0], "kind": "eq_delete", "key": "o_orderkey"}],
+        .filter(_p_in_years(years)),
+        "o_orderkey",
+        "dv1",
         meta={"ts": 2000},
     )
     mor_sec = round(time.perf_counter() - t0, 2)
@@ -162,7 +162,7 @@ def main() -> int:
         json.dumps(
             {
                 "sf_dir": sf_dir,
-                "deleted_keys": int(dv[0]["rows"]),
+                "deleted_keys": sum(d["rows"] for d in dels),
                 "touched_file_bytes": touched_bytes,
                 "cow_rewrite_bytes": cow_bytes,
                 "mor_delete_file_bytes": mor_bytes,
