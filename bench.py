@@ -262,37 +262,15 @@ def main() -> int:
     ops = all_operators()
     names = [n for n in sorted(ops) if not only or n in only]
 
-    # Committed twin for the outlier re-measure pass (VERDICT r12
-    # task #2): read the PRE-RUN detail — in the driver's official run
-    # that file is the builder's gate-clean measurement of the same
-    # code at git HEAD. Read before the suite overwrites it at the end.
-    #
-    # Per-config sidecars (VERDICT r13 task #2): r13's 8-core run
-    # overwrote the 32-core run's `remeasured` evidence because both
-    # configs shared one file. Each full-suite run now writes
-    # BENCH_DETAIL_c{cpus}.json; BENCH_DETAIL.json stays the full-host
-    # (32c here) canonical. The twin lookup only ever compares
-    # same-cpus, same-sf medians — an 8-core median is not a valid 2×
-    # outlier reference for a 32-core run or vice versa.
+    # Per-config sidecars: each full-suite run writes
+    # BENCH_DETAIL_c{cpus}.json, so runs at different core counts keep
+    # separate records; BENCH_DETAIL.json is the full-host canonical.
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     base_dir = os.path.dirname(os.path.abspath(__file__))
     detail_path = os.path.join(base_dir, "BENCH_DETAIL.json")
     config_path = os.path.join(base_dir, f"BENCH_DETAIL_c{cpus}.json")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf_dir
-    twin = {}
-    for path in (config_path, detail_path):
-        try:
-            with open(path) as f:
-                prior = json.load(f)
-        except (OSError, ValueError):
-            continue
-        # Only a same-sf, same-cpus twin is comparable; a map from
-        # another scale factor or core count would trigger mass
-        # re-measures (or mask real ones).
-        if prior.get("sf") == sf_val and prior.get("cpus") == cpus:
-            twin = prior.get("queries", {})
-            break
 
     def execute(name: str) -> None:
         ops[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
@@ -313,30 +291,6 @@ def main() -> int:
         # would otherwise accumulate cached blocks across the full-registry run.
         spark.catalog.clearCache()
 
-    # Outlier re-measure pass (VERDICT r12 task #2): the quiesce gate
-    # proves the run STARTED quiet; nothing detects a mid-run
-    # contention burst, and every round 20-60 ops have come out >2×
-    # their same-code gated twin while the run median simultaneously
-    # IMPROVED — a contiguous-burst signature, not a regression. Any
-    # op whose median exceeds 2× its committed twin (and 1 s absolute
-    # — sub-second ops are scheduling noise) is re-measured
-    # median-of-3 at the END of the suite, when the burst has moved
-    # on; both numbers are recorded, and the op's official number is
-    # the better median (two same-code medians: contention only ever
-    # inflates, so min is the faithful one).
-    remeasured: dict[str, dict] = {}
-    for name in names:
-        base = twin.get(name)
-        if base and timings[name] > max(2 * base, 1.0):
-            second = measure(name)
-            remeasured[name] = {
-                "first": timings[name],
-                "remeasure": second,
-                "gated_twin": base,
-            }
-            timings[name] = min(timings[name], second)
-            spark.catalog.clearCache()
-
     total = round(sum(timings.values()), 3)
     # The driver captures only ~2.2 KB of stdout; a full-registry timing map
     # (~4.5 KB) overflowed it in r1 AND r2 ("parsed": null both rounds).
@@ -353,14 +307,12 @@ def main() -> int:
         "runs_per_query": runs,
         "quiesce_start": quiesce,
         "quiesce_end": _end_quiescence(),
-        "remeasured": remeasured,
     }
-    # A name-filtered run (debug/smoke) must not clobber the sidecars:
-    # the committed details are the full-suite gated twins the outlier
-    # re-measure pass compares against. Full-suite runs write their
-    # per-config sidecar always, and the canonical BENCH_DETAIL.json
-    # only when this run IS the full-host config — a reduced-core run
-    # can no longer destroy the canonical run's remeasure evidence.
+    # A name-filtered run (debug/smoke, per-op A/B) must not clobber
+    # the sidecars, which record full-suite runs. Full-suite runs write
+    # their per-config sidecar always, and the canonical
+    # BENCH_DETAIL.json only when this run IS the full-host config — a
+    # reduced-core run never overwrites the full-host record.
     if not only:
         with open(config_path, "w") as f:
             json.dump(detail, f, indent=1, sort_keys=True)
@@ -383,7 +335,6 @@ def main() -> int:
             "queries": top10,
             "sf": detail["sf"],
             "n_queries": len(timings),
-            "n_remeasured": len(remeasured),
             "quiesce": quiesce,
             "detail": os.path.basename(config_path),
         },

@@ -15,7 +15,13 @@ from pyspark.sql import functions as F
 
 from logdb_spark.functions.ranking import bounded_global_window
 from logdb_spark.functions.numeric import dec4, dround, ratio
-from logdb_spark.functions.temporal import ts_str
+from logdb_spark.functions.temporal import (
+    hour_order,
+    hourly_series,
+    sessions,
+    ts_str,
+    user_order,
+)
 from logdb_spark.registry import register, track_persist
 from logdb_spark.sources.load import load_table
 from logdb_spark.sources.scratch import scratch_dir
@@ -38,9 +44,9 @@ def log_time_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events per hour per type — the canonical log query. One shuffle
     on (hour, type): ~720 × 5 groups regardless of input size."""
     ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(
-        ts_str(F.date_trunc("hour", "ts")).alias("hour"), "event_type"
-    ).agg(F.count(F.lit(1)).alias("n"))
+    return hourly_series(
+        ev, [F.count(F.lit(1)).alias("n")], keys=("event_type",)
+    ).select(ts_str("hh").alias("hour"), "event_type", "n")
 
 
 @register(
@@ -129,26 +135,11 @@ def log_top_talkers(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def log_sessionize_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (gap > 30 min ⇒ new session): the
-    classic two-window composition — lag to flag boundaries, running
-    sum to number sessions, then per-session aggregation. All three
+    ``sessions`` kernel's two windows — lag to flag boundaries, running
+    sum to number sessions — then per-session aggregation. All three
     steps share the (user_id) partitioning: ONE shuffle total."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", F.date_trunc("second", "ts").alias("ts")
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | ((F.col("ts").cast("long") - F.lag("ts").over(w).cast("long")) > 1800),
-            1,
-        ).otherwise(0),
-    )
-    numbered = flagged.withColumn(
-        "session_id",
-        F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return numbered.groupBy("user_id", "session_id").agg(
+    ev = load_table(spark, sf_dir, "events").select("user_id", "event_id", "ts")
+    return sessions(ev).groupBy("user_id", "session_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         ts_str(F.min("ts")).alias("session_start"),
         (F.max("ts").cast("long") - F.min("ts").cast("long")).alias("duration_s"),
@@ -223,13 +214,12 @@ def log_rate_spike(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~720 rows), THEN the unpartitioned lag window — cheap because it
     runs on the aggregate, not the raw stream."""
     ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(F.date_trunc("hour", "ts").alias("hour")).agg(
-        F.count(F.when(F.col("event_type") == "error", 1)).alias("n_errors")
+    hourly = hourly_series(
+        ev, [F.count(F.when(F.col("event_type") == "error", 1)).alias("n_errors")]
     )
-    w = bounded_global_window("hour", max_rows=720, why="calendar hour grid (<=720 rows/month)")
-    prev = F.coalesce(F.lag("n_errors").over(w), F.lit(0))
+    prev = F.coalesce(F.lag("n_errors").over(hour_order()), F.lit(0))
     return hourly.select(
-        ts_str("hour").alias("hour"),
+        ts_str("hh").alias("hour"),
         "n_errors",
         prev.alias("prev_errors"),
         (F.col("n_errors") - prev).alias("delta"),
@@ -385,10 +375,7 @@ def log_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly rollup is the only real shuffle, same as log_time_histogram.
     """
     ev = load_table(spark, sf_dir, "events")
-    h = (
-        ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("hr"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    h = hourly_series(ev, [F.count(F.lit(1)).alias("n")], keys=("event_type",))
     med = h.groupBy("event_type").agg(
         F.percentile("n", F.lit(0.5)).alias("med")
     )
@@ -403,7 +390,7 @@ def log_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("mad") > 0) & (F.col("dev") > 3.0 * F.col("mad")))
         .select(
             "event_type",
-            ts_str("hr").alias("hour"),
+            ts_str("hh").alias("hour"),
             "n",
             "med",
             "mad",
@@ -698,23 +685,20 @@ def log_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     above the error-budget line, so a brief blip (fast only) and a
     slowly-digesting old incident (slow only) both stay quiet. The
     6 h rates aggregate FROM the hourly partials (no second scan),
-    and the windows align by integer epoch division — both engines
-    compute identical bucket ids. Budget math stays in exact integer
-    counts until the final rounded ratios; the 20% SLO line matches
+    and the windows align by integer epoch division of the hour (a
+    6 h window is whole hours in UTC) — both engines compute identical
+    bucket ids. Budget math stays in exact integer counts until the
+    final rounded ratios; the 20% SLO line matches
     the fixture's ~20% error share so the flag actually exercises
     both branches."""
-    hourly = (
-        load_table(spark, sf_dir, "events")
-        .groupBy(
-            F.date_trunc("hour", "ts").alias("hour"),
-            F.floor(F.col("ts").cast("long") / 21600)
-            .cast("bigint")
-            .alias("win6"),
-        )
-        .agg(
+    hourly = hourly_series(
+        load_table(spark, sf_dir, "events"),
+        [
             F.count(F.lit(1)).alias("n"),
             F.count(F.when(F.col("event_type") == "error", 1)).alias("err"),
-        )
+        ],
+    ).withColumn(
+        "win6", F.floor(F.col("hh").cast("long") / 21600).cast("bigint")
     )
     sixly = hourly.groupBy("win6").agg(
         F.sum("n").alias("n6"), F.sum("err").alias("err6")
@@ -722,7 +706,7 @@ def log_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     r1 = F.col("err") * F.lit(1.0) / F.col("n")
     r6 = F.col("err6") * F.lit(1.0) / F.col("n6")
     return hourly.join(sixly, "win6").select(
-        ts_str("hour").alias("hour"),
+        ts_str("hh").alias("hour"),
         ratio(r1).alias("rate_1h"),
         ratio(r6).alias("rate_6h"),
         ratio(r1 / F.lit(0.20)).alias("burn_1h"),
@@ -766,42 +750,26 @@ def log_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     assumes one row per tick.
 
     Scale shape: the heavy input collapses to ≤720 hourly rows in
-    ONE shuffle with map-side partials; the grid is generated from a
-    1-row min/max aggregate via ``sequence`` + ``explode`` (no
-    driver loop, no crossJoin); the forward-fill window orders ≤720
+    ONE shuffle with map-side partials; ``hourly_series(dense=True)``
+    generates the grid from a 1-row min/max aggregate (no driver
+    loop, no crossJoin); the forward-fill window orders ≤720
     post-aggregation rows — bounded by the time span, never by input
     size (the same bounded-global-window posture as log_rate_spike).
     At 100 TB nothing changes but the partial-agg fan-in. Revenue
     sums run in exact decimal (dec4/dround) so both engines fill
     identical values."""
     ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.filter((F.col("event_type") == "purchase") & (F.col("value") > 150))
-        .groupBy(F.date_trunc("hour", "ts").alias("hh"))
-        .agg(
-            dround(F.sum(dec4("value"))).alias("rev"),
-            F.count(F.lit(1)).alias("n"),
-        )
+    dense = hourly_series(
+        ev.filter((F.col("event_type") == "purchase") & (F.col("value") > 150)),
+        [dround(F.sum(dec4("value"))).alias("rev"), F.count(F.lit(1)).alias("n")],
+        dense=True,
     )
-    grid = (
-        hourly.agg(F.min("hh").alias("lo"), F.max("hh").alias("hi"))
-        .select(
-            F.explode(
-                F.expr("sequence(lo, hi, interval 1 hour)")
-            ).alias("hh")
-        )
-    )
-    w = bounded_global_window(
-        "hh", max_rows=720, why="calendar hour grid (<=720 rows/month)"
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    return (
-        grid.join(hourly, "hh", "left")
-        .select(
-            ts_str(F.col("hh")).alias("hour"),
-            F.coalesce("n", F.lit(0)).cast("bigint").alias("n_events"),
-            F.col("n").isNull().alias("is_gap"),
-            F.last("rev", ignorenulls=True).over(w).alias("revenue_filled"),
-        )
+    w = hour_order().rowsBetween(Window.unboundedPreceding, 0)
+    return dense.select(
+        ts_str(F.col("hh")).alias("hour"),
+        F.coalesce("n", F.lit(0)).cast("bigint").alias("n_events"),
+        F.col("n").isNull().alias("is_gap"),
+        F.last("rev", ignorenulls=True).over(w).alias("revenue_filled"),
     )
 
 
@@ -836,14 +804,9 @@ def log_seasonal_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the partial-agg fan-in grows. The profile join key (hod) is
     derived, so Catalyst broadcasts the 24-row side."""
     ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.filter(F.col("event_type") == "error")
-        .groupBy(
-            F.date_trunc("hour", "ts").alias("hh"),
-            F.hour("ts").alias("hod"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    hourly = hourly_series(
+        ev.filter(F.col("event_type") == "error"), [F.count(F.lit(1)).alias("n")]
+    ).withColumn("hod", F.hour("hh"))
     base = hourly.groupBy("hod").agg(F.avg("n").alias("expected"))
     return hourly.join(F.broadcast(base), "hod").select(
         ts_str(F.col("hh")).alias("hour"),
@@ -897,15 +860,11 @@ def log_change_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hours with zero errors are absent from the series (documented;
     compose with log_gap_fill for a strictly regular grid)."""
     ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.filter(F.col("event_type") == "error")
-        .groupBy(F.date_trunc("hour", "ts").alias("hh"))
-        .agg(F.count(F.lit(1)).alias("n"))
+    hourly = hourly_series(
+        ev.filter(F.col("event_type") == "error"), [F.count(F.lit(1)).alias("n")]
     )
     mu = hourly.agg(F.avg("n").alias("mu"))
-    w = bounded_global_window(
-        "hh", max_rows=720, why="calendar hour grid (<=720 rows/month)"
-    ).rowsBetween(Window.unboundedPreceding, 0)
+    w = hour_order().rowsBetween(Window.unboundedPreceding, 0)
     framed = hourly.join(F.broadcast(mu)).withColumn(
         "lst", F.collect_list(F.col("n").cast("double")).over(w)
     )
@@ -1145,18 +1104,14 @@ def log_alert_suppress(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation, same 1.2×mean threshold). Calendar-bounded at any
     input size."""
     ev = load_table(spark, sf_dir, "events")
-    hourly = (
-        ev.filter(F.col("event_type") == "error")
-        .groupBy(F.date_trunc("hour", "ts").alias("hh"))
-        .agg(F.count(F.lit(1)).alias("n"))
+    hourly = hourly_series(
+        ev.filter(F.col("event_type") == "error"), [F.count(F.lit(1)).alias("n")]
     )
     thr = hourly.agg((F.avg("n") * 1.2).alias("thr"))
     spikes = hourly.join(F.broadcast(thr)).filter(F.col("n") >= F.col("thr"))
-    w = bounded_global_window("hh", max_rows=720, why="calendar hour grid (<=720 rows/month)")
     grp = spikes.withColumn(
         "island",
-        F.col("hh")
-        - F.make_interval(hours=F.row_number().over(w)),
+        F.col("hh") - F.make_interval(hours=F.row_number().over(hour_order())),
     )
     return grp.groupBy("island").agg(
         ts_str(F.min("hh")).alias("incident_start"),
@@ -1753,14 +1708,17 @@ def log_hourly_top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ACTIVE users (already aggregated — not events), so partitions
     stay hour-sized and the output is 3 rows per hour forever."""
     ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        ts_str(F.date_trunc("hour", "ts")).alias("hour"), "user_id"
-    ).agg(F.count(F.lit(1)).alias("n"))
-    w = Window.partitionBy("hour").orderBy(F.col("n").desc(), "user_id")
+    hourly = hourly_series(ev, [F.count(F.lit(1)).alias("n")], keys=("user_id",))
+    w = Window.partitionBy("hh").orderBy(F.col("n").desc(), "user_id")
     return (
         hourly.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 3)
-        .select("hour", "user_id", "n", F.col("rank").cast("int").alias("rank"))
+        .select(
+            ts_str("hh").alias("hour"),
+            "user_id",
+            "n",
+            F.col("rank").cast("int").alias("rank"),
+        )
     )
 
 
@@ -1986,13 +1944,14 @@ def log_flap_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-partitioned over <= 24 hourly rows, so the state machine
     shuffles on calendar keys only."""
     ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        F.to_date("ts").alias("day"), F.date_trunc("hour", "ts").alias("hour")
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(F.col("event_type") == "error", 1)).alias("err"),
-    )
-    w = Window.partitionBy("day").orderBy("hour")
+    hourly = hourly_series(
+        ev,
+        [
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(F.col("event_type") == "error", 1)).alias("err"),
+        ],
+    ).withColumn("day", F.to_date("hh"))
+    w = Window.partitionBy("day").orderBy("hh")
     states = hourly.select(
         "day",
         (4 * F.col("err") >= F.col("n")).alias("hot"),
@@ -2325,33 +2284,16 @@ def log_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     section=SECTION,
 )
 def log_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily bounce rate: the share of sessions (30-min-gap
-    sessionization, same construction as log_sessionize_gap) that
+    """Daily bounce rate: the share of sessions (the ``sessions``
+    kernel's 30-min-gap sessions, as in log_sessionize_gap) that
     contain exactly ONE event — the engagement-quality number next to
     the raw session counts, plus the mean session duration. Sessions
     aggregate per (user, session) first — one user_id shuffle shared
     with the sessionizing windows — then roll up to ≤31 day rows;
     durations are integer epoch seconds, so the averages are exact
     ratios of integers rounded once."""
-    ev = load_table(spark, sf_dir, "events")
-    e = ev.select(
-        "user_id", "event_id", F.date_trunc("second", "ts").alias("ts")
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    flagged = e.withColumn(
-        "new_s",
-        F.when(gap > 1800, 1)
-        .when(F.lag("ts").over(w).isNull(), 1)
-        .otherwise(0),
-    )
-    numbered = flagged.withColumn(
-        "session_id",
-        F.sum("new_s").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    sessions = numbered.groupBy("user_id", "session_id").agg(
+    ev = load_table(spark, sf_dir, "events").select("user_id", "event_id", "ts")
+    per_session = sessions(ev).groupBy("user_id", "session_id").agg(
         F.to_date(F.min("ts")).alias("day"),
         F.count(F.lit(1)).alias("n_events"),
         (
@@ -2360,7 +2302,7 @@ def log_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_b = F.count(F.when(F.col("n_events") == 1, 1))
     n_s = F.count(F.lit(1))
-    return sessions.groupBy(
+    return per_session.groupBy(
         F.date_format("day", "yyyy-MM-dd").alias("day")
     ).agg(
         n_s.alias("n_sessions"),
@@ -2410,28 +2352,14 @@ def log_burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
     avoid). Fano = 1 is Poisson; the bursty flag (Fano > 1.5)
     compares scaled integers, and the factor itself is
     (n·Σx² − (Σx)²)/(n·Σx) — all integer until the final round, the
-    log_p99_trend discipline. The grid comes from a 1-row min/max
-    aggregate × the 5-type relation (log_gap_fill's pattern); every
-    relation after the first hourly shuffle is calendar-bounded."""
+    log_p99_trend discipline. ``hourly_series(dense=True)`` builds the
+    grid (the min/max hour × the 5-type relation, log_gap_fill's
+    grid with keys); every relation after the first hourly shuffle is
+    calendar-bounded."""
     ev = load_table(spark, sf_dir, "events")
-    counts = ev.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("hh")
-    ).agg(F.count(F.lit(1)).alias("x"))
-    grid = (
-        ev.agg(
-            F.date_trunc("hour", F.min("ts")).alias("lo"),
-            F.date_trunc("hour", F.max("ts")).alias("hi"),
-        )
-        .select(
-            F.explode(F.expr("sequence(lo, hi, interval 1 hour)")).alias(
-                "hh"
-            )
-        )
-        .crossJoin(F.broadcast(ev.select("event_type").distinct()))
-    )
-    full_grid = grid.join(counts, ["event_type", "hh"], "left").select(
-        "event_type", F.coalesce("x", F.lit(0)).alias("x")
-    )
+    full_grid = hourly_series(
+        ev, [F.count(F.lit(1)).alias("x")], keys=("event_type",), dense=True
+    ).select("event_type", F.coalesce("x", F.lit(0)).alias("x"))
     sums = full_grid.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").alias("sx"),
@@ -2479,9 +2407,10 @@ def log_burstiness_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def log_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix over event types: for each
-    user's event stream (session-bounded by the same 30-min gap rule as
-    log_sessionize_gap — a transition across a session break is not
-    behaviour), count from→to steps and normalise per source state.
+    user's event stream (session-bounded by the ``sessions`` kernel: a
+    step counts only inside a session, ``new_session = 0`` — a
+    transition across a session break is not behaviour), count from→to
+    steps and normalise per source state.
 
     Scale shape: ONE user_id shuffle for the lag window (same key the
     sessionizers use), then a groupBy on the 5×5-bounded type-pair
@@ -2489,17 +2418,13 @@ def log_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition after partial aggregation. The per-from normalisation
     runs as a window over the ≤25-row result; trivially bounded."""
     ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type",
-        F.date_trunc("second", "ts").alias("ts"),
+        "user_id", "event_id", "event_type", "ts"
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    steps = ev.select(
-        F.lag("event_type").over(w).alias("from_type"),
+    steps = sessions(ev).select(
+        F.lag("event_type").over(user_order()).alias("from_type"),
         F.col("event_type").alias("to_type"),
-        (F.col("ts").cast("long") - F.lag("ts").over(w).cast("long")).alias(
-            "gap_s"
-        ),
-    ).filter(F.col("from_type").isNotNull() & (F.col("gap_s") <= 1800))
+        "new_session",
+    ).filter(F.col("from_type").isNotNull() & (F.col("new_session") == 0))
     trans = steps.groupBy("from_type", "to_type").agg(
         F.count(F.lit(1)).alias("n")
     )

@@ -18,7 +18,7 @@ from logdb_spark.functions.ranking import (
     bounded_global_window,
     global_row_number,
 )
-from logdb_spark.functions.temporal import ts_str
+from logdb_spark.functions.temporal import hourly_series, ts_str
 from logdb_spark.registry import register
 from logdb_spark.sources.load import load_table
 
@@ -427,9 +427,9 @@ def win_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame list is intermediate only; output cells stay scalar
     (SURVEY §7.3.5)."""
     ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("hh")
-    ).agg(dround(F.sum(dec4("value"))).alias("rev"))
+    hourly = hourly_series(
+        ev, [dround(F.sum(dec4("value"))).alias("rev")], keys=("event_type",)
+    )
     w = (
         Window.partitionBy("event_type")
         .orderBy("hh")

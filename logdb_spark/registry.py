@@ -58,88 +58,14 @@ class Operator:
 _REGISTRY: dict[str, Operator] = {}
 _LOADED = False
 
-# Driver-gate coverage rotation, refreshed for round 14 (VERDICT r13
-# task #9). The driver correctness report caps at 50 enumeration
-# entries per round, so enumeration order IS evidence budget. The
-# tuple below is `python -m tools.staleness --tuple` output verbatim
-# (stale-first from the CORRECTNESS_r*.json ledger): the r13 rotation
-# retired the r4 tail, so the head is now the remaining r5 bucket
-# (26 ops) followed by the whole r7 bucket (34 ops), 60 names in
-# all. The 50-cap samples all 26 r5 ops plus the first 24 r7 ops; the
-# last 10 r7 ops carry over to the next round's head.
-_R14_NEEDS_ROW_FIRST = (
-    "log_change_point",  # r5
-    "log_cohort_ltv",  # r5
-    "log_error_budget_burndown",  # r5
-    "log_gap_fill",  # r5
-    "log_retention_cohorts",  # r5
-    "log_seasonal_baseline",  # r5
-    "log_tail_sampling",  # r5
-    "log_user_growth_curve",  # r5
-    "mm_multipart_assembly",  # r5
-    "sample_importance_weighted",  # r5
-    "sample_mixture_weights",  # r5
-    "sample_shard_budget",  # r5
-    "scan_dynamic_partition_pruning",  # r5
-    "scan_partition_pruned",  # r5
-    "set_except_all",  # r5
-    "set_intersect_all",  # r5
-    "sql_recursive_spike_chain",  # r5
-    "stream_upsert_latest",  # r5
-    "text_bigram_lm",  # r5
-    "text_chunk_splitter",  # r5
-    "text_oov_rate",  # r5
-    "text_search_ranked",  # r5
-    "win_ewma",  # r5
-    "win_percent_of_total",  # r5
-    "win_running_distinct",  # r5
-    "win_vwap_running",  # r5
-    "agg_count_min_sketch",  # r7
-    "agg_heavy_hitters_twopass",  # r7
-    "agg_listagg_ordered",  # r7
-    "embed_covariance_pairs",  # r7
-    "embed_dim_stats",  # r7
-    "embed_matryoshka_recall",  # r7
-    "fn_collation_suite",  # r7
-    "fn_interval_suite",  # r7
-    "ingest_xml_records",  # r7
-    "join_asof_interpolate",  # r7
-    "join_grid_spatial",  # r7
-    "log_ab_lift",  # r7
-    "log_backfill_detect",  # r7
-    "log_cusum_drift",  # r7
-    "log_decayed_rate",  # r7
-    "log_flap_detect",  # r7
-    "log_k_anonymity",  # r7
-    "log_p99_trend",  # r7
-    "log_pagerank_influence",  # r7
-    "log_rolling_wau",  # r7
-    "log_sequence_pattern",  # r7
-    "log_triangle_count",  # r7
-    "log_user_lifecycle_stages",  # r7
-    "sample_poisson_bootstrap",  # r7
-    "scan_aggregate_pushdown",  # r7
-    "scan_catalog_stats",  # r7
-    "scan_time_travel",  # r7
-    "set_union_by_name_evolution",  # r7
-    "sim_mmr_diversify",  # r7
-    "sink_python_stream_datasource",  # r7
-    "sink_zorder_layout",  # r7
-    "sql_parameterized",  # r7
-    "sql_pivot_clause",  # r7
-    "sql_q11_important_stock",  # r7
-)
-
 
 def _enumeration_order(ops: dict[str, Operator]) -> list[str]:
-    priority = {n: i for i, n in enumerate(_R14_NEEDS_ROW_FIRST)}
     phase = {m: i for i, m in enumerate(_OPERATOR_MODULES)}
-    # Stable sort: the explicit stale-first priority head, then module
-    # build-phase order, registration order within a module. Keying on
-    # the module keeps the order the same when a module is imported
-    # before the registry loads (LogDB imports the kernels it shares).
-    return sorted(ops, key=lambda n: (0, priority[n]) if n in priority
-                  else (1, phase[ops[n].fn.__module__]))
+    # Stable sort: module build-phase order, registration order within
+    # a module. Keying on the module keeps the order the same when a
+    # module is imported before the registry loads (LogDB imports the
+    # kernels it shares).
+    return sorted(ops, key=lambda n: phase[ops[n].fn.__module__])
 
 
 # Persisted intermediates tracked for deferred release. An operator

@@ -267,3 +267,23 @@ def test_matryoshka_overlap_bounded_by_k(spark):
         assert 0 <= r["overlap_at_5"] <= 5
         if r["top1_kept"] == 1:
             assert r["overlap_at_5"] >= 1
+
+
+def test_enumeration_order_is_module_then_registration_order():
+    """The registry enumerates operators module by module, in
+    ``_OPERATOR_MODULES`` build order, and within a module in the
+    order the module registers them (its source order). No operator
+    is pulled ahead of that order."""
+    import inspect
+
+    from logdb_spark.registry import _OPERATOR_MODULES
+
+    phase = {m: i for i, m in enumerate(_OPERATOR_MODULES)}
+    keys = [
+        (phase[op.fn.__module__], inspect.unwrap(op.fn).__code__.co_firstlineno)
+        for op in OPS.values()
+    ]
+    assert keys == sorted(keys)
+    assert len(set(keys)) == len(keys)
+    assert {k[0] for k in keys} == set(phase.values())
+    assert list(OPS)[:2] == ["scan_parquet", "scan_projection_pushdown"]

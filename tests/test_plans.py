@@ -967,20 +967,36 @@ def test_bounded_global_window_declarations_hold(spark):
 
 def test_dumpplans_normalized_dumps_of_one_query_are_equal(spark):
     """tools.dumpplans strips what differs between two plannings of the
-    same query — expression ids, lambda-variable counters and scratch
-    directory suffixes — and nothing else, so a diff of two dump
+    same query — expression ids, lambda-variable counters, scratch
+    directory suffixes, and the codegen and query-stage ids that follow
+    AQE's stage order — and nothing else, so a diff of two dump
     directories shows only node changes."""
+    import re
+
     from pyspark.sql import functions as F
 
     from tools.dumpplans import normalize
 
-    def dump():
-        df = spark.range(10).select(
-            F.transform(F.array("id", "id"), lambda x: x + 1).alias("a")
-        )
+    def explain(df):
         return df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
+
+    def dump():
+        return explain(spark.range(10).select(
+            F.transform(F.array("id", "id"), lambda x: x + 1).alias("a")
+        ))
+
+    def two_branch_aggregation():
+        a = spark.range(100).groupBy((F.col("id") % 3).alias("k")).agg(
+            F.count(F.lit(1)).alias("n")
+        )
+        b = spark.range(100).groupBy((F.col("id") % 5).alias("k")).agg(
+            F.sum("id").alias("s")
+        )
+        df = a.join(b, "k")
+        df.collect()  # the final AQE plan carries the stage numbering
+        return explain(df)
 
     first, second = dump(), dump()
     assert first != second
@@ -989,6 +1005,27 @@ def test_dumpplans_normalized_dumps_of_one_query_are_equal(spark):
     assert normalize(
         "[file:/tmp/logdb_scratch_vkiwwx_2/logdb_sdm_dias7fwj/docs_state]"
     ) == "[file:/tmp/logdb_scratch_*/logdb_sdm_*/docs_state]"
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        first, second = two_branch_aggregation(), two_branch_aggregation()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert normalize(first) == normalize(second)
+    # When the second branch's stage is planned first, the two branches
+    # trade their codegen ids (1, 2) and shuffle-stage ids (0, 1).
+    swapped = re.sub(
+        r"(codegen id : )([12])\]", lambda m: f"{m[1]}{3 - int(m[2])}]", second
+    )
+    swapped = re.sub(
+        r"(ShuffleQueryStage\n(?:.+\n)*?Arguments: )([01])\n",
+        lambda m: f"{m[1]}{1 - int(m[2])}\n",
+        swapped,
+    )
+    assert swapped != second
+    assert normalize(first) == normalize(swapped)
+    assert normalize(first.replace("% 5", "% 7")) != normalize(swapped)
 
 
 def test_dumpplans_captures_the_cow_rewrite_of_touched_files_only(spark):

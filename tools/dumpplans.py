@@ -12,10 +12,13 @@ rewrites, ``foreachBatch`` batches) is dumped too, in write order, as
 
 The written text drops what differs between two sessions planning the
 same query: expression ids (``vec_id#123L`` → ``vec_id#L``), ``plan_id=``
-numbers, lambda-variable counters (``lambda x_90#`` → ``lambda x_#``)
-and the random suffix of scratch directories (``/logdb_sdm_e3ytgb06`` →
-``/logdb_sdm_*``). ``diff -r`` between two dump directories then shows
-only node changes.
+numbers, lambda-variable counters (``lambda x_90#`` → ``lambda x_#``),
+the random suffix of scratch directories (``/logdb_sdm_e3ytgb06`` →
+``/logdb_sdm_*``), and the whole-stage codegen ids and query-stage ids
+(``[codegen id : 2]``, a ``ShuffleQueryStage``'s ``Arguments: 3``),
+which follow the order AQE plans stages in and so swap between the
+branches of one query from run to run. ``diff -r`` between two dump
+directories then shows only node changes.
 """
 
 from __future__ import annotations
@@ -29,6 +32,8 @@ _SESSION_IDS = (
     (re.compile(r"(#|plan_id=)\d+"), r"\1"),
     (re.compile(r"(lambda \w+?_)\d+#"), r"\1#"),
     (re.compile(r"(/logdb_[a-z_]+?_)[a-z0-9_]{8}(?=[/\],\s]|$)"), r"\1*"),
+    (re.compile(r"(\[codegen id : )\d+"), r"\1"),
+    (re.compile(r"(QueryStage\n(?:.+\n)*?Arguments: )\d+"), r"\1"),
 )
 
 
